@@ -15,21 +15,26 @@ iterative gap-merge loop:
 1. W3  run-length encode the boolean exceedance series per cell:
        ``changed = flag != lag(flag)`` -> ``run_id = running sum``.
 2. W4  min-duration filter: ``groupBy(cell, run_id) HAVING count >= d``.
-3. W5  gap joining: a *second* sessionization over the surviving runs
-       themselves: ``gap = start - lag(end) - 1``; runs chain into one
-       event while ``gap <= maxGap``. The reference merges iteratively
-       (first short gap, repeat: marineHeatWaves.py:330-345); a single
-       cumulative-sum pass is equivalent because merging is
-       chain-transitive (A-B merge never *increases* the B-C gap).
-4. A5/W6/W7  metrics: expand each event to its member days
-       (``explode(sequence(start, end))`` -> equi-join back to the
-       series — cheaper at scale than a range join), one hash
-       aggregate for every intensity/category/rate metric.
+3. W5  gap joining: a *second* sessionization over the runs
+       themselves: ``gap = start - (last qualifying end) - 1``; runs
+       chain into one event while ``gap <= maxGap``. The reference
+       merges iteratively (first short gap, repeat:
+       marineHeatWaves.py:330-345); a single cumulative-sum pass is
+       equivalent because merging is chain-transitive (A-B merge never
+       *increases* the B-C gap).
+4. A5/W6/W7  metrics. Production (:func:`fused_detect_metrics`): each
+       run carries mergeable metric partials, and one
+       ``groupBy(cell, event)`` merges an event's member runs.
+       Component path (:func:`event_metrics`): expand each event to its
+       member days (``explode(sequence(start, end))``) and equi-join
+       back to the series.
 
-Shuffle budget for the whole flow: one window sort per cell (W3), one
-agg (W4), one tiny window over runs (W5), one equi-join + agg (A5).
-All operators are stock DataFrame ops -> Catalyst/AQE handle skew,
-partial aggregation, and broadcast of the small events side.
+Shuffle budget of the production flow: ONE hash exchange of the series
+on ``cell_id`` (the W3 window). The (cell, run) partial aggregate, the
+W5 window over each cell's runs (ordered by run id) and the
+(cell, event) merge all reuse that partitioning — no further exchange,
+no persist, no broadcast. All operators are stock DataFrame ops, so
+Catalyst/AQE handle skew, partial aggregation and partition coalescing.
 """
 
 from __future__ import annotations
@@ -79,11 +84,8 @@ def enrich_series(
     """Fuse every per-cell sequential derivation the detection chain
     needs into ONE window pass (one exchange + one sort of the big
     table): anomaly projections, RLE run ids (W3), boundary neighbors
-    for the rate formulas (W7), and the series extent.
-
-    The full pipeline consumes this twice (event sessionization and
-    event metrics); materializing it once replaces three separate
-    exchange+sort subtrees — the dominant cost at scale.
+    for the rate formulas (W7), and the series extent — replacing three
+    separate exchange+sort subtrees, the dominant cost at scale.
     """
     w = Window.partitionBy(cell_col).orderBy(time_col)
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -198,6 +200,7 @@ def detect_events(
     return _assemble_events(
         runs,
         cell_col=cell_col,
+        qualifies=F.lit(True),
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
     )
@@ -213,49 +216,58 @@ def _assemble_events(
     runs: DataFrame,
     *,
     cell_col: str = "cell_id",
+    qualifies: Column,
     max_gap: int,
     join_across_gaps: bool,
-    with_run_range: bool = False,
+    aggs: tuple[Column, ...] = (),
 ) -> DataFrame:
-    """W5 gap joining + event assembly over a qualifying-runs table
-    (cell, __run, run_start, run_end): chain runs while the gap is
-    <= max_gap (one cumulative pass — equivalent to the reference's
-    iterative first-gap merge by chain-transitivity,
-    marineHeatWaves.py:330-345), then emit per-cell event ids ordered
-    by date_start. Shared by :func:`detect_events` and
-    :func:`fused_detect_metrics` so the gap semantics cannot drift
-    between the component and fused paths. ``with_run_range``
-    additionally carries each event's [__run_lo, __run_hi] member-run
-    id range (the fused metric merge keys on it)."""
+    """W5 gap joining + event assembly: ONE ordered pass over each
+    cell's runs (``__run`` increasing in time), then one
+    ``groupBy(cell, event)`` with the extra per-event ``aggs``. Shared
+    by :func:`detect_events` and :func:`fused_detect_metrics` so the gap
+    semantics cannot drift between the component and fused paths.
+
+    A ``qualifies`` run opens a new event unless the gap since the last
+    qualifying run's end is <= ``max_gap`` (always opens without
+    ``join_across_gaps``); the running count of openings is the event
+    id, in time order — equivalent to the reference's iterative
+    first-gap merge by chain-transitivity (marineHeatWaves.py:330-345).
+    A non-qualifying run belongs to the event around it iff the next
+    qualifying run does not open a new one (which implies an earlier
+    qualifying run, so an event is open). Every step keys on the cell,
+    so input hash-partitioned by cell needs no exchange."""
+    w = Window.partitionBy(cell_col).orderBy("__run")
+    new = qualifies
     if join_across_gaps:
-        w2 = Window.partitionBy(cell_col).orderBy("run_start")
-        gap = F.datediff("run_start", F.lag("run_end").over(w2)) - 1
-        new_event = F.when(gap.isNull() | (gap > max_gap), 1).otherwise(0)
-        grouped = runs.withColumn(
-            "__evt",
-            F.sum(new_event).over(w2.rowsBetween(Window.unboundedPreceding, 0)),
+        last_end = F.last(F.when(qualifies, F.col("run_end")), ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, -1)
         )
-    else:
-        grouped = runs.withColumn("__evt", F.col("__run"))
-    extra = (
-        [F.min("__run").alias("__run_lo"), F.max("__run").alias("__run_hi")]
-        if with_run_range
-        else []
+        new = new & (
+            last_end.isNull() | (F.datediff("run_start", last_end) - 1 > max_gap)
+        )
+    runs = runs.withColumns({"__q": qualifies, "__new": new.cast("int")})
+    evt = F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    next_new = F.first(F.when(F.col("__q"), F.col("__new")), ignorenulls=True).over(
+        w.rowsBetween(1, Window.unboundedFollowing)
     )
-    events = grouped.groupBy(cell_col, "__evt").agg(
-        F.min("run_start").alias("date_start"),
-        F.max("run_end").alias("date_end"),
-        *extra,
+    member = F.col("__q") | (next_new == 0)
+    g = (
+        runs.withColumn("__evt", F.when(member, evt))
+        .filter(F.col("__evt").isNotNull())
+        .groupBy(cell_col, "__evt")
+        .agg(
+            F.min("run_start").alias("date_start"),
+            F.max("run_end").alias("date_end"),
+            *aggs,
+        )
     )
-    return events.select(
+    return g.select(
         cell_col,
-        F.row_number()
-        .over(Window.partitionBy(cell_col).orderBy("date_start"))
-        .alias("event_id"),
+        F.col("__evt").cast("int").alias("event_id"),
         "date_start",
         "date_end",
         (F.datediff("date_end", "date_start") + 1).alias("duration"),
-        *(["__run_lo", "__run_hi"] if with_run_range else []),
+        *g.columns[4:],
     )
 
 
@@ -327,7 +339,6 @@ def fused_detect_metrics(
     join_across_gaps: bool = True,
     with_rates: bool = True,
     with_categories: bool = True,
-    materialize_runs: bool = True,
 ) -> DataFrame:
     """Detection + per-event metrics in ONE pass over the series: the
     production tail of :func:`~mhw3d_detection_spark.plans.detect_mhw`.
@@ -349,8 +360,10 @@ def fused_detect_metrics(
     the event's member days — INCLUDING the sub-``max_gap`` non-exceed
     days the reference also aggregates over
     (marineHeatWaves.py:350-411 slices tt_start:tt_end+1) — are exactly
-    the runs with ``run_lo <= run_id <= run_hi``. False runs before the
-    first / after the last qualifying run fall outside that range.
+    its qualifying runs plus every run between two of them
+    (:func:`_assemble_events`). Runs before the first / after the last
+    qualifying run, or inside a gap that splits two events, belong to
+    no event.
 
     Variance uses the closed form sqrt(E[x^2] - E[x]^2) over merged
     partials (population, like np.var ddof=0) — computed on values
@@ -363,12 +376,12 @@ def fused_detect_metrics(
     the center back. Clamped at 0 against residual rounding.
 
     Scale shape: hashpartitioning(cell) from the enrich window
-    satisfies the (cell, run) aggregate, so the partial agg adds NO
-    exchange; the runs table is O(flag transitions) per cell — orders
-    of magnitude smaller than the series — and every later step
-    (window over runs, broadcast range join, final merge) operates on
-    it alone. Replaces: a full-series persist + a second series pass +
-    the event-days explode-join.
+    satisfies the (cell, run) aggregate, the ordered window over each
+    cell's runs and the (cell, event) merge, so the whole tail after
+    the enrich exchange is ONE stage: no exchange, no persist, no
+    broadcast join. The runs table (O(flag transitions) per cell) is
+    never cached — a cached plan skips AQE partition coalescing, so it
+    and every re-scan would run at the full initial partition count.
     """
     p = _run_partials(
         enriched,
@@ -377,8 +390,6 @@ def fused_detect_metrics(
         with_rates=with_rates,
         with_categories=with_categories,
     )
-    if materialize_runs:
-        p = p.persist()  # tiny: O(flag transitions), consumed twice
     return _metrics_from_partials(
         p,
         cell_col=cell_col,
@@ -497,27 +508,9 @@ def _metrics_from_partials(
 ) -> DataFrame:
     """Event assembly + metric merge over a run-partials table
     (:func:`_run_partials` output, normalized to a ``cell_id`` column):
-    W4 min-duration filter, W5 gap joining, the [run_lo, run_hi]
-    member-run merge, and the category/rate tail."""
-    # W4 + W5 on qualifying true runs — shared event assembly with
-    # detect_events, plus each event's member-run id range
-    runs_q = p.filter(F.col("flag") & (F.col("run_days") >= min_duration))
-    events = _assemble_events(
-        runs_q,
-        max_gap=max_gap,
-        join_across_gaps=join_across_gaps,
-        with_run_range=True,
-    )
-
-    # member runs: equi on cell + integer run-id range; both sides tiny,
-    # events broadcast (the range predicate rides on the hash join)
-    ev = events.withColumnRenamed("cell_id", "__ev_cell")
-    j = p.join(
-        F.broadcast(ev),
-        (p["cell_id"] == ev["__ev_cell"])
-        & (p["__run"] >= ev["__run_lo"])
-        & (p["__run"] <= ev["__run_hi"]),
-    ).drop("__ev_cell", "__run_lo", "__run_hi")
+    W4 min-duration filter, W5 gap joining and the per-event merge of
+    every member run's partials, all in the one ordered pass of
+    :func:`_assemble_events`, then the category/rate tail."""
 
     def merged_std(n, s, q2):
         n, s, q2 = F.sum(n), F.sum(s), F.sum(q2)
@@ -571,8 +564,12 @@ def _metrics_from_partials(
             ).alias("__ends_at_series_end"),
         ]
 
-    g = j.groupBy("cell_id", "event_id", "date_start", "date_end", "duration").agg(
-        *m_aggs
+    g = _assemble_events(
+        p,
+        qualifies=F.col("flag") & (F.col("run_days") >= min_duration),
+        max_gap=max_gap,
+        join_across_gaps=join_across_gaps,
+        aggs=tuple(m_aggs),
     )
 
     out = g.select(
@@ -592,9 +589,7 @@ def _metrics_from_partials(
         with_rates=with_rates,
         band_col="__pkc_val",
     )
-    return out.drop("__run_lo", "__run_hi").withColumnRenamed(
-        "cell_id", cell_col
-    )
+    return out.withColumnRenamed("cell_id", cell_col)
 
 
 def detect_partials(
@@ -659,7 +654,6 @@ def merge_detect_partials(
     join_across_gaps: bool = True,
     with_rates: bool = True,
     with_categories: bool = True,
-    materialize_runs: bool = True,
 ) -> DataFrame:
     """Incremental detection, reduce side: union of per-batch
     :func:`detect_partials` rows -> the whole-series event metrics.
@@ -680,6 +674,10 @@ def merge_detect_partials(
     3. Renumber runs (alternating flags -> consecutive ids) and run the
        standard event assembly + metric merge
        (:func:`_metrics_from_partials`).
+
+    All three steps key on the cell, so the union's one exchange on
+    ``cell_id`` serves every window and aggregate after it; nothing is
+    persisted.
     """
     w = Window.partitionBy("cell_id").orderBy("run_start")
     wall = Window.partitionBy("cell_id")
@@ -788,8 +786,6 @@ def merge_detect_partials(
             }
         )
     runs = runs.withColumns(cols).drop("__g")
-    if materialize_runs:
-        runs = runs.persist()
 
     return _metrics_from_partials(
         runs,

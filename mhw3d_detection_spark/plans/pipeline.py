@@ -7,9 +7,10 @@ The canonical flow (reference README.md:53-64, design doc steps 1-3):
     detect + calculate_mhw_metrics            ->  events table
 
 Physical plan at scale (SURVEY.md §4): scan(pruned) -> shuffle on
-(cell, doy) for the clim agg -> broadcast-join clim back -> window
-sort per cell for sessionization -> event agg. Three shuffles of the
-big table total.
+(cell, doy) for the clim agg -> broadcast-join clim back -> ONE
+shuffle on cell for the detection window, after which the run
+partials, event assembly and metric merge all run in that stage
+(operators/detection.py fused_detect_metrics).
 """
 
 from __future__ import annotations
@@ -44,7 +45,6 @@ def detect_mhw(
     clim_ts: DataFrame | None = None,
     with_rates: bool = True,
     with_categories: bool = True,
-    materialize_series: bool = True,
     materialize_input: bool = False,
     pool_mode: str = "series",
 ) -> DataFrame:
@@ -102,11 +102,10 @@ def detect_mhw(
     # One fused window pass derives run ids + boundary neighbors +
     # series extent (one exchange + one sort of the big table), and
     # fused_detect_metrics consumes it in a SINGLE per-(cell, run)
-    # partial aggregate — the big table is never materialized and never
-    # read twice; sessionization, gap joining and the metric merge all
-    # run on the tiny runs table (operators/detection.py
-    # fused_detect_metrics). materialize_series now governs the runs
-    # table persist (two consumers: event assembly + metric merge).
+    # partial aggregate, then one ordered pass over each cell's runs
+    # and one (cell, event) merge — all on the window's cell
+    # partitioning, so nothing after it shuffles, persists or
+    # broadcasts (operators/detection.py fused_detect_metrics).
     enriched = enrich_series(
         flagged, cell_col=cell_col, time_col=time_col, temp_col=temp_col
     )
@@ -119,7 +118,6 @@ def detect_mhw(
         join_across_gaps=join_across_gaps,
         with_rates=with_rates,
         with_categories=with_categories,
-        materialize_runs=materialize_series,
     )
     if cold_spells:
         # Negate every intensity metric; durations/dates/rates keep sign

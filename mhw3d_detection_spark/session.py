@@ -26,7 +26,13 @@ RUNTIME_CONFS = {
     # array buffers) fall off a cliff once a partition's hash map
     # outgrows memory — measured 456 s -> 138 s on the 16x (49 M
     # sample) pipeline, with no change at bench scale (AQE coalesces
-    # the small shuffles back to a handful of tasks).
+    # the small shuffles back to a handful of tasks). Persisted or
+    # cached plans skip that coalescing: a persist() downstream of a
+    # wide exchange materializes all 1024 partitions, and every scan of
+    # the cached table runs 1024 tasks. Keep tiny intermediates
+    # unpersisted (operators/detection.py fused_detect_metrics), or
+    # allow spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    # around the caching loop (operators/spatial.py).
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "1024",
 }
 

@@ -3,10 +3,23 @@
 exactly maxGap, gap of maxGap+1, all-below cells, chain-transitive
 gap merging."""
 
+import datetime as dt
+import math
+
+import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from mhw3d_detection_spark.operators.detection import detect_events
+from mhw3d_detection_spark.operators.detection import (
+    detect_events,
+    detect_partials,
+    enrich_series,
+    exceedance,
+    fused_detect_metrics,
+    merge_detect_partials,
+)
+from tests.oracle_np import mhw_events_np
 
 
 def _ts(spark, flags, start="2000-01-01", cell=0):
@@ -91,3 +104,135 @@ def test_null_flags_break_events(spark):
     evs = detect_events(df).collect()
     # NULL -> false, a 2-day non-exceed gap -> merged by maxGap=2
     assert len(evs) == 1 and evs[0]["duration"] == 12
+
+
+# --- event membership on the fused and incremental paths ------------
+#
+# The production tail assembles events in one ordered pass over each
+# cell's runs: qualifying runs (exceeding, >= min_duration days) open or
+# extend events, and a non-qualifying run (cool days, or a too-short
+# exceedance) is a member only when it sits between two qualifying runs
+# of the same event. Each case below pins one edge of that rule against
+# the NumPy loop oracle, on the whole-series fused path AND on the
+# incremental merge with its batch split placed inside a gap.
+
+DAY0 = dt.date(2001, 3, 1)
+SEAS, THRESH = 10.0, 12.0
+
+
+def _temps(pattern):
+    """``pattern`` is a list of (exceeds, n_days) segments; exceeding
+    days vary across all four category bands, cool days stay below the
+    threshold but vary too, so every metric sees distinct values."""
+    rng = np.random.default_rng(len(pattern) * 101 + sum(n for _, n in pattern))
+    out = []
+    for hot, n in pattern:
+        lo, hi = (12.25, 19.0) if hot else (8.0, 11.75)
+        out += list(np.round(rng.uniform(lo, hi, n) * 4) / 4)
+    return np.array(out)
+
+
+def _day(i):
+    return DAY0 + dt.timedelta(days=int(i))
+
+
+def _assert_matches_oracle(df, temps, kw):
+    exp = mhw_events_np(
+        temps, np.full(len(temps), SEAS), np.full(len(temps), THRESH), **kw
+    )
+    got = [r.asDict() for r in df.orderBy("event_id").collect()]
+    assert len(got) == len(exp), (got, exp)
+    for g, e in zip(got, exp):
+        assert g["cell_id"] == 0
+        assert (g["date_start"], g["date_end"], g["date_peak"]) == (
+            _day(e["start"]),
+            _day(e["end"]),
+            _day(e["peak"]),
+        ), (g, e)
+        for c, v in e.items():
+            if c in ("start", "end", "peak"):
+                continue
+            if isinstance(v, (float, np.floating)):
+                assert math.isclose(g[c], v, rel_tol=1e-9, abs_tol=1e-9), (c, g, e)
+            else:
+                assert g[c] == v, (c, g, e)
+
+
+# (pattern, detection kwargs, day index of the batch split — inside a gap)
+MEMBERSHIP_CASES = {
+    # a 1-day exceedance inside a 3-day gap <= max_gap: both cool days
+    # and the short run are members of the joined event
+    "short_run_inside_joined_gap": (
+        [(1, 6), (0, 1), (1, 1), (0, 1), (1, 6)],
+        dict(min_duration=5, max_gap=3),
+        7,
+    ),
+    "gap_exactly_max_gap": (
+        [(1, 5), (0, 2), (1, 5)],
+        dict(min_duration=5, max_gap=2),
+        6,
+    ),
+    "gap_max_gap_plus_one": (
+        [(1, 5), (0, 3), (1, 5)],
+        dict(min_duration=5, max_gap=2),
+        6,
+    ),
+    # short runs within max_gap of the first / last qualifying run still
+    # belong to no event (they are dropped before gap joining)
+    "short_runs_outside_first_and_last": (
+        [(0, 2), (1, 2), (0, 1), (1, 6), (0, 2), (1, 5), (0, 1), (1, 3), (0, 2)],
+        dict(min_duration=5, max_gap=2),
+        12,
+    ),
+    "max_gap_zero": (
+        [(1, 5), (0, 1), (1, 6), (0, 1), (1, 2), (0, 1), (1, 5)],
+        dict(min_duration=5, max_gap=0),
+        5,
+    ),
+    "join_across_gaps_off": (
+        [(1, 5), (0, 1), (1, 1), (0, 1), (1, 5)],
+        dict(min_duration=5, max_gap=3, join_across_gaps=False),
+        6,
+    ),
+    # events touching the series start and end take the edge branches
+    # of the onset/decline rates
+    "events_touch_series_start_and_end": (
+        [(1, 6), (0, 4), (1, 7)],
+        dict(min_duration=5, max_gap=2),
+        8,
+    ),
+}
+
+
+def _check_both_paths(spark, temps, kw, split):
+    df = spark.createDataFrame(
+        [(0, _day(i), float(t), SEAS, THRESH) for i, t in enumerate(temps)],
+        "cell_id int, time date, temp double, seas double, thresh double",
+    )
+    _assert_matches_oracle(
+        fused_detect_metrics(enrich_series(exceedance(df)), **kw), temps, kw
+    )
+    cut = F.lit(_day(split))
+    # later batch first: batches may arrive in any order
+    parts = detect_partials(df.filter(F.col("time") >= cut)).unionByName(
+        detect_partials(df.filter(F.col("time") < cut))
+    )
+    _assert_matches_oracle(merge_detect_partials(parts, **kw), temps, kw)
+
+
+@pytest.mark.parametrize("case", sorted(MEMBERSHIP_CASES))
+def test_event_membership_fused_and_incremental(spark, case):
+    pattern, kw, split = MEMBERSHIP_CASES[case]
+    _check_both_paths(spark, _temps(pattern), kw, split)
+
+
+@pytest.mark.parametrize("first,last", [(0, -1), (-1, 0)])
+def test_rate_edges_peak_on_series_boundary(spark, first, last):
+    # events at both series ends, with the peak on the series' first /
+    # last day (the rate formulas' zero branches) or elsewhere in the
+    # event (their divide-by-days branches)
+    up = [13.0, 14.0, 15.0, 16.0, 17.0, 18.0]
+    head = up[::-1] if first == 0 else up[1:] + up[:1]
+    tail = up if last == 0 else up[-1:] + up[:-1]
+    temps = np.array(head + [9.0, 9.5, 10.0, 9.0] + tail)
+    _check_both_paths(spark, temps, dict(min_duration=5, max_gap=2), len(head) + 2)

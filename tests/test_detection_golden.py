@@ -64,3 +64,43 @@ def test_rates_and_categories_present(events):
         + events["duration_extreme"]
     )
     assert (cat_sum == events["duration"]).all()
+
+
+# The events table's column names, order and types are public API: the
+# detection tail may be re-planned freely, but downstream readers
+# (parquet sinks, the report plans) key on this exact schema.
+EVENTS_SCHEMA = [
+    ("cell_id", "int"),
+    ("event_id", "int"),
+    ("date_start", "date"),
+    ("date_end", "date"),
+    ("duration", "int"),
+    ("intensity_mean", "double"),
+    ("intensity_var", "double"),
+    ("intensity_cumulative", "double"),
+    ("intensity_mean_relThresh", "double"),
+    ("intensity_var_relThresh", "double"),
+    ("intensity_cumulative_relThresh", "double"),
+    ("intensity_mean_abs", "double"),
+    ("intensity_var_abs", "double"),
+    ("intensity_cumulative_abs", "double"),
+    ("duration_moderate", "bigint"),
+    ("duration_strong", "bigint"),
+    ("duration_severe", "bigint"),
+    ("duration_extreme", "bigint"),
+    ("intensity_max", "double"),
+    ("date_peak", "date"),
+    ("intensity_max_relThresh", "double"),
+    ("intensity_max_abs", "double"),
+    ("category", "string"),
+    ("rate_onset", "double"),
+    ("rate_decline", "double"),
+]
+
+
+def test_detect_mhw_schema_is_stable(spark):
+    ts = spark.createDataFrame(
+        [(0, date(2000, 1, 1), 15.0)], "cell_id int, time date, temp double"
+    )
+    got = [(f.name, f.dataType.simpleString()) for f in detect_mhw(ts).schema.fields]
+    assert got == EVENTS_SCHEMA

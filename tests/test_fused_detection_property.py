@@ -4,8 +4,8 @@
 NumPy-oracle-checked) on arbitrary series.
 
 This pins the subtle equivalences the fusion relies on:
-- an event's member days == the runs in its [run_lo, run_hi] id range
-  (gap days included, leading/trailing false runs excluded);
+- an event's member days == its qualifying runs plus every run between
+  two of them (gap days included, leading/trailing runs excluded);
 - peak argmax with earliest-day tie-break merges across run partials
   (temps are quantized to force exact rel_seas ties);
 - closed-form sqrt(E[x^2]-E[x]^2) vs var_pop;
@@ -77,7 +77,6 @@ def test_fused_equals_component_composition(
         enriched,
         min_duration=min_duration,
         max_gap=max_gap,
-        materialize_runs=False,
     )
     events = detect_events(
         enriched,

@@ -74,7 +74,6 @@ def test_merged_partials_equal_whole_series(
         enrich_series(exceedance(df)),
         min_duration=min_duration,
         max_gap=max_gap,
-        materialize_runs=False,
     )
 
     cuts = sorted({int(f * len(temps)) for f in cut_fracs})
@@ -99,7 +98,6 @@ def test_merged_partials_equal_whole_series(
         parts,
         min_duration=min_duration,
         max_gap=max_gap,
-        materialize_runs=False,
     )
 
     assert set(whole.columns) == set(merged.columns)
@@ -135,13 +133,13 @@ def test_null_seas_first_batch_does_not_null_moments(spark):
         rows, "cell_id int, time date, temp double, seas double, thresh double"
     )
     whole = fused_detect_metrics(
-        enrich_series(exceedance(df)), materialize_runs=False
+        enrich_series(exceedance(df))
     )
     cut = DAY0 + dt.timedelta(days=10)  # batch 1 = exactly the NULL-seas days
     parts = detect_partials(df.filter(F.col("time") < F.lit(cut))).unionByName(
         detect_partials(df.filter(F.col("time") >= F.lit(cut)))
     )
-    merged = merge_detect_partials(parts, materialize_runs=False)
+    merged = merge_detect_partials(parts)
 
     a = whole.orderBy("event_id").collect()
     b = merged.orderBy("event_id").collect()

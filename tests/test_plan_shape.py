@@ -113,36 +113,35 @@ def test_grid_arrays_fused_two_aggregates_no_explode(spark, sf_dir):
     assert _count_exchanges(plan) <= 3, plan
 
 
+def _prepartitioned_series(spark, sf_dir):
+    o = load_table(spark, sf_dir, "orders")
+    return (
+        o.groupBy(
+            (F.col("o_custkey") % 10).alias("cell_id"),
+            F.to_date("o_orderdate").alias("time"),
+        )
+        .agg(F.avg("o_totalprice").alias("temp"))
+        .withColumns({"seas": F.lit(150000.0), "thresh": F.lit(180000.0)})
+        .repartition("cell_id")
+    )
+
+
 def test_fused_detection_tail_single_series_exchange(spark, sf_dir):
     # The pipeline's detection tail (enrich window -> per-run partial
     # aggregate -> event assembly -> metric merge) must touch the big
     # series ONCE: with the input pre-partitioned by cell_id, the only
     # hash exchange in the whole plan is that repartition — the window
     # reuses it, the (cell, run) aggregate shares the window's
-    # partitioning, and every runs-table step (gap-join window, event
-    # groupBy, broadcast member join, final merge) inherits cell_id
-    # clustering. No second pass, no big-table persist.
+    # partitioning, and every runs-table step (the ordered pass over
+    # each cell's runs, the event merge) inherits cell_id clustering.
+    # No second pass, no big-table persist.
     from mhw3d_detection_spark.operators.detection import (
         enrich_series,
         exceedance,
         fused_detect_metrics,
     )
 
-    o = load_table(spark, sf_dir, "orders")
-    ts = (
-        o.groupBy(
-            (F.col("o_custkey") % 10).alias("cell_id"),
-            F.to_date("o_orderdate").alias("time"),
-        )
-        .agg(F.avg("o_totalprice").alias("temp"))
-        .withColumns(
-            {
-                "seas": F.lit(150000.0),
-                "thresh": F.lit(180000.0),
-            }
-        )
-        .repartition("cell_id")
-    )
+    ts = _prepartitioned_series(spark, sf_dir)
     enr = enrich_series(exceedance(ts))
     partials = enr.groupBy("cell_id", "__run").agg(
         F.count(F.lit(1)).alias("run_days")
@@ -153,6 +152,43 @@ def test_fused_detection_tail_single_series_exchange(spark, sf_dir):
     # (cell, __run) aggregate is satisfied by the same clustering — no
     # third exchange anywhere in the plan
     assert _count_exchanges(plan) <= 2, plan
+
+
+def test_fused_detection_full_plan_one_stage_tail(spark, sf_dir):
+    # The whole detection tail (run partials -> ordered pass over each
+    # cell's runs -> (cell, event) metric merge) runs on the enrich
+    # window's cell_id partitioning: no cached run table (a persisted
+    # plan skips AQE coalescing and runs at the initial partition
+    # count), no broadcast member join, and no exchange beyond the
+    # input groupBy + the explicit repartition.
+    from mhw3d_detection_spark.operators.detection import (
+        enrich_series,
+        exceedance,
+        fused_detect_metrics,
+    )
+
+    ts = _prepartitioned_series(spark, sf_dir)
+    plan = _executed(fused_detect_metrics(enrich_series(exceedance(ts))))
+    assert "InMemoryTableScan" not in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert _count_exchanges(plan) <= 2, plan
+
+
+def test_merge_detect_partials_not_cached(spark, sf_dir):
+    # the incremental merge shares the same tail: no cached run table
+    from mhw3d_detection_spark.operators.detection import (
+        detect_partials,
+        merge_detect_partials,
+    )
+
+    ts = _prepartitioned_series(spark, sf_dir)
+    cut = F.lit("1995-01-01").cast("date")
+    parts = detect_partials(ts.filter(F.col("time") < cut)).unionByName(
+        detect_partials(ts.filter(F.col("time") >= cut))
+    )
+    plan = _executed(merge_detect_partials(parts))
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_rank_return_periods_two_phase(spark, sf_dir):
