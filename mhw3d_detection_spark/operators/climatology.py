@@ -32,8 +32,8 @@ Two pooling modes, matching the two reference implementations:
   window sort of the big table before the aggregate.
 - ``pool_mode="grid"`` — +/-W positions on the *(year, doy) grid* (the
   xarray legacy module, legacy/climatology.py:61-119: rolling over the
-  doy axis with cross-year pads into adjacent *baseline* years). Pure
-  projection + explode + filter — NO window pass, one shuffle of the
+  doy axis with cross-year pads into adjacent *baseline* years). Day
+  groups + one per-cell aggregate — NO window pass, one shuffle of the
   big table total. This is the scale path: at 100 TB it removes an
   entire exchange+sort of the input.
 
@@ -278,10 +278,8 @@ def clim_arrays(
     stay NaN.
 
     Either way the physical plan is a single per-cell aggregate plus
-    JVM higher-order functions: no densify join, no Feb-29 broadcast
-    join, no 3-copy explode + window sort. At scale this removes three
-    operators and two joins from the clim tail and shrinks the severity
-    broadcast from cells*366 rows to one row per cell.
+    JVM higher-order functions — no join, no window sort — and the
+    severity broadcast is one row per cell instead of cells*366 rows.
 
     Output: (cell_id, <col>_arr ...) — in "full" mode a dense 366-slot
     array (slot d, 1-based, is DOY d); in "valid" mode a doy->value MAP
@@ -332,8 +330,8 @@ def _arrays_tail(
     circular running mean, as per-cell array transforms over the
     ``{col}_arr`` dense 366-slot columns (NaN = absent DOY). Factored
     out of :func:`clim_arrays` so the fused grid-pooling path
-    (:func:`pooled_climatology` pool_mode="grid", output="arrays") can
-    reuse it on arrays it builds directly from day groups."""
+    (:func:`_grid_clim_arrays_fused`) can reuse it on arrays it builds
+    directly from day groups."""
     doys = F.sequence(F.lit(1), F.lit(366))
     if feb29:
 
@@ -461,18 +459,17 @@ def _grid_clim_arrays_fused(
     *,
     pctile: float,
     window_half_width: int,
-    feb29_interp: bool,
-    smooth_width: int | None,
-    smooth_mode: str,
+    present_doys: bool = False,
 ) -> DataFrame:
-    """Grid-mode pooled climatology straight to dense per-cell arrays in
-    ONE aggregation cascade — the production plan behind
-    ``pooled_climatology(pool_mode="grid", output="arrays")``.
+    """Grid-mode pooled climatology straight to raw dense per-cell
+    ``seas_arr``/``thresh_arr`` (NaN = empty pool) in ONE aggregation
+    cascade — the plan behind every ``pool_mode="grid"`` output; the
+    Feb-29 + smoothing tail (:func:`_arrays_tail`) is the caller's.
 
     Two hash aggregates, zero joins, zero persists:
 
     1. ``groupBy(cell, doy)`` compresses the baseline series into day
-       groups (value buffer + sum/count + year extent + per-sample
+       groups (value buffer + sum + year extent + per-sample
        (year, temp) rows for the ~2W/366 edge DOYs whose cross-year
        wraps need per-sample year gating — reference
        legacy/climatology.py:61-119, _build_cross_year_pad:24-58).
@@ -480,22 +477,16 @@ def _grid_clim_arrays_fused(
 
     All pooling then happens as JVM higher-order functions on the one
     row per cell: bucket t draws whole day-groups d in [t-W, t+W] and
-    year-gated edge samples from the opposite year edge, the exact
-    percentile is an ``array_sort`` + closed-form readout per slot, and
-    the Feb-29 + circular-smooth tail is shared with
-    :func:`clim_arrays`.
+    year-gated edge samples from the opposite year edge, and the exact
+    percentile is an ``array_sort`` + closed-form readout per slot.
+    Each day group crosses the wire ONCE, and hash-partitioning the
+    input by cell_id alone satisfies both aggregates, so a
+    pre-partitioned source reaches the arrays with no exchange at all.
 
-    Scale shape: the previous plan exploded every day group 11x into a
-    second full exchange before the bucket aggregate; here each day
-    group crosses the wire ONCE (the per-cell collect shuffles
-    cells x 366 rows), removing an 11x-amplified shuffle and the
-    multi-consumer persist barrier. Per-cell state is
-    O(baseline samples per cell) — the same order as the dense arrays
-    the operator emits anyway.
-
-    Hash-partitioning the input by cell_id alone satisfies BOTH
-    aggregates' distributions, so a pre-partitioned/bucketed source
-    reaches the arrays with no exchange at all.
+    ``present_doys=True`` adds ``__present``: per slot, did the bucket
+    receive any sample, NULL temps included (the raw row set of
+    ``densify=False``). It reads the day-group map's keys, so the
+    aggregates — and the arrays the severity join reads — are unchanged.
     """
     W = window_half_width
     q = pctile / 100.0
@@ -549,37 +540,42 @@ def _grid_clim_arrays_fused(
     # map to a DENSE 366-slot array ONCE per row and index it O(1) in
     # the per-slot lambdas. The dense forms are materialized as real
     # columns (referenced many times -> CollapseProject keeps them).
-    percell = percell.withColumns(
-        {
-            "__dga": F.transform(
-                doys, lambda d: F.coalesce(F.element_at("__dgm", d), empty_d)
-            ),
-            "__suma": F.transform(
-                doys, lambda d: F.coalesce(F.element_at("__sm", d), F.lit(0.0))
-            ),
-            "__edgea": F.transform(
-                doys, lambda d: F.coalesce(F.element_at("__edgem", d), empty_e)
-            ),
-        }
-    )
+    dense = {
+        "__dga": F.transform(
+            doys, lambda d: F.coalesce(F.element_at("__dgm", d), empty_d)
+        ),
+        "__suma": F.transform(
+            doys, lambda d: F.coalesce(F.element_at("__sm", d), F.lit(0.0))
+        ),
+        "__edgea": F.transform(
+            doys, lambda d: F.coalesce(F.element_at("__edgem", d), empty_e)
+        ),
+    }
+    if present_doys:
+        # a day group pooling only NULLs has an EMPTY value buffer but
+        # still a key in the map
+        dense["__hasa"] = F.transform(
+            doys, lambda d: F.element_at("__dgm", d).isNotNull()
+        )
+    percell = percell.withColumns(dense)
 
-    dga = F.col("__dga")
     edgea = F.col("__edgea")
     ymin = F.col("__y_min")
     ymax = F.col("__y_max")
 
-    def pool_slot(t: Column) -> Column:
-        """Sorted pooled-value buffer of bucket t (empty at Feb 29)."""
-        # whole day-groups d in [t-W, t+W] that exist on the calendar:
-        # a SLICE of the dense per-doy buffers — no membership lambda
+    def day_window(a: Column, t: Column) -> Column:
+        """Calendar slots [t-W, t+W] of a dense per-doy array (a slice)."""
         lo = F.greatest(t - W, F.lit(1))
         hi = F.least(t + W, F.lit(366))
-        vals_nw = F.flatten(F.slice(dga, lo, hi - lo + 1))
-        # cross-year wraps: bucket t <= W receives the tail-of-year edge
-        # samples of years BEFORE the cell's last present year; bucket
-        # t >= 367-W receives head-of-year samples of years AFTER the
-        # first (the reference's adjacent-grid-row rule: NaN pads at the
-        # year-grid edges, _build_cross_year_pad:24-58)
+        return F.slice(a, lo, hi - lo + 1)
+
+    def wrap_rows(t: Column) -> Column:
+        """Cross-year edge samples of bucket t, NULL temps kept: bucket
+        t <= W receives the tail-of-year edge samples of years BEFORE
+        the cell's last present year; bucket t >= 367-W receives
+        head-of-year samples of years AFTER the first (the reference's
+        adjacent-grid-row rule: NaN pads at the year-grid edges,
+        _build_cross_year_pad:24-58)."""
         hi_rows = F.when(
             F.lit(W) >= t,
             F.filter(
@@ -594,8 +590,13 @@ def _grid_clim_arrays_fused(
                 lambda r: r["y"] > ymin,
             ),
         ).otherwise(empty_e)
+        return F.concat(hi_rows, lo_rows)
+
+    def pool_slot(t: Column) -> Column:
+        """Sorted pooled-value buffer of bucket t (empty at Feb 29)."""
+        vals_nw = F.flatten(day_window(F.col("__dga"), t))
         w_vals = F.filter(
-            F.transform(F.concat(hi_rows, lo_rows), lambda r: r["t"]),
+            F.transform(wrap_rows(t), lambda r: r["t"]),
             lambda x: x.isNotNull(),
         )
         return F.when(
@@ -643,17 +644,35 @@ def _grid_clim_arrays_fused(
     def thr_slot(t: Column) -> Column:
         return F.coalesce(exact_percentile_sorted(F.element_at(pool, t), q), nan)
 
-    out = percell.select(
+    def present(t: Column) -> Column:
+        nonwrap = F.array_contains(day_window(F.col("__hasa"), t), True)
+        return (t != FEB29) & (nonwrap | (F.size(wrap_rows(t)) > 0))
+
+    return percell.select(
         "cell_id",
         F.transform(doys, seas_slot).alias("seas_arr"),
         F.transform(doys, thr_slot).alias("thresh_arr"),
+        *([F.transform(doys, present).alias("__present")] if present_doys else []),
     )
-    return _arrays_tail(
-        out,
-        ("seas", "thresh"),
-        feb29=feb29_interp,
-        smooth_width=smooth_width,
-        smooth_mode=smooth_mode,
+
+
+def _clim_rows(arrs: DataFrame, keep: Column | None = None) -> DataFrame:
+    """Read per-cell clim arrays back as ``(cell_id, doy, seas, thresh)``
+    rows for the DOYs 1..366 where ``keep`` holds, with the
+    :func:`calculate_severity` readout (``element_at``, NaN -> NULL).
+    The DOY axis is a constant on purpose: Spark pushes the non-empty
+    filter it infers from an exploded array below the projection that
+    computes the array, which would evaluate the pooling chain twice."""
+    rows = arrs.withColumn("doy", F.explode(F.sequence(F.lit(1), F.lit(366))))
+    if keep is not None:
+        rows = rows.filter(keep)
+    return rows.select(
+        "cell_id",
+        "doy",
+        *[
+            _denanify(F.element_at(f"{c}_arr", F.col("doy"))).alias(c)
+            for c in ("seas", "thresh")
+        ],
     )
 
 
@@ -671,9 +690,7 @@ def pooled_climatology(
     strict_nan: bool = False,
     feb29_interp: bool = True,
     densify: bool = True,
-    materialize: bool = True,
     pool_mode: str = "series",
-    exact: bool = True,
     output: str = "rows",
 ) -> DataFrame:
     """Compute ``clim(cell_id, doy, seas, thresh)`` from a long-format
@@ -681,29 +698,33 @@ def pooled_climatology(
     `compute_threshold` in one pass over the data.
 
     strict_nan=False reproduces the vendored oracle's nan-skipping
-    `nanmean`/`nanpercentile`; strict_nan=True reproduces the xarray
-    port's skipna=False contract — any measured-but-NULL sample in the
-    pool nullifies the bucket (legacy/climatology.py:243-252).
+    `nanmean`/`nanpercentile`; strict_nan=True (series pooling only)
+    reproduces the xarray port's skipna=False contract — any
+    measured-but-NULL sample in the pool nullifies the bucket
+    (legacy/climatology.py:243-252).
 
-    materialize=True persists the aggregated clim (O(cells x 366) rows
-    — orders of magnitude smaller than the input): Spark shares no
-    subplans across DataFrame branches, and the downstream densify /
-    Feb-29 / severity / detection stages all reference clim, so without
-    persisting, the expensive pool+percentile subtree re-executes once
-    per branch (measured: 4x scans of the source at sf0.1).
+    Both pooling modes end in the per-cell array form of
+    :func:`clim_arrays`. output="arrays" returns it: one row per cell,
+    dense 366-slot arrays, or doy->value maps when smooth_mode="valid"
+    smooths. output="rows" reads it back the way
+    :func:`calculate_severity` does: 366 rows per cell, or one row per
+    present DOY (the map's entries) from the maps.
 
-    output="arrays" returns ONE row per cell: dense 366-slot
-    seas/thresh arrays for smooth_mode="full", doy->value maps for
-    smooth_mode="valid" (see :func:`clim_arrays` — both read back with
-    the same ``element_at``). densify=False raises (the form is
-    inherently dense). The production grid+arrays combination
-    (exact=True, strict_nan=False) takes the fused single-consumer
-    cascade (:func:`_grid_clim_arrays_fused`) where materialize is a
-    no-op — there is no multi-consumer barrier left to control; on the
-    strict_nan / exact=False arrays paths materialize still governs
-    the day-group persist. The clim output itself is never persisted
-    (single consumer; the severity broadcast materializes it).
+    densify=False returns the raw pooled buckets instead — only DOYs
+    that received samples (a grid bucket pooling only NULLs is a
+    (NULL, NULL) row), no Feb-29 interpolation, no smoothing — so it
+    requires feb29_interp=False, smooth_width=None and output="rows".
+    Nothing is persisted: every form is a single-consumer tree.
     """
+    if output not in ("rows", "arrays"):
+        raise ValueError(f"unknown output {output!r}")
+    if pool_mode == "grid" and strict_nan:
+        raise ValueError("strict_nan=True requires pool_mode='series'")
+    if not densify and (feb29_interp or smooth_width or output == "arrays"):
+        raise ValueError(
+            "densify=False returns the raw pooled buckets: it requires "
+            "feb29_interp=False, smooth_width=None and output='rows'"
+        )
     doy = clim_doy(F.col(time_col))
     d = ts.select(
         F.col(cell_col).alias("cell_id"),
@@ -730,6 +751,36 @@ def pooled_climatology(
             d.withColumn("__targets", F.collect_list(target).over(w))
             .select("cell_id", "temp", F.explode("__targets").alias("doy"))
         )
+        aggs = [
+            F.avg("temp").alias("seas"),
+            F.sort_array(F.collect_list("temp")).alias("__sorted"),
+        ]
+        if strict_nan:
+            aggs.append(
+                F.max(F.col("temp").isNull().cast("int")).alias("__has_missing")
+            )
+        clim = (
+            pooled.groupBy("cell_id", "doy")
+            .agg(*aggs)
+            .withColumn(
+                "thresh",
+                exact_percentile_sorted(F.col("__sorted"), pctile / 100.0),
+            )
+            .drop("__sorted")
+        )
+        if strict_nan:
+            ok = F.col("__has_missing") == 0
+            clim = clim.withColumns(
+                {c: F.when(ok, F.col(c)) for c in ("seas", "thresh")}
+            ).drop("__has_missing")
+        if not densify:
+            return clim
+        arrs = clim_arrays(
+            clim,
+            feb29=feb29_interp,
+            smooth_width=smooth_width,
+            smooth_mode=smooth_mode,
+        )
     elif pool_mode == "grid":
         # (year, doy)-grid semantics (legacy/climatology.py:61-119):
         # sample (y, d) contributes to bucket t = d + o for o in +/-W;
@@ -739,222 +790,33 @@ def pooled_climatology(
         # cross-year pads, _build_cross_year_pad:24-58: the first row's
         # left pad / last row's right pad are NaN; rows exist for
         # observed years only). Only baseline samples enter the grid at
-        # all (legacy:159-161).
-        #
-        # No window — and no 11x blow-up of individual samples either:
-        # non-wrapping contributions are pre-aggregated into per-
-        # (cell, doy) DAY GROUPS (one collect over the 1x input) whose
-        # small arrays/sums are then merged across each bucket's 11
-        # member days; only the ~2W/366 of rows whose window crosses
-        # the year boundary (where the adjacent-year existence rule
-        # needs per-sample years) take the row-explode path. Measured
-        # 2.7x faster than exploding every sample 11x, with the same
-        # single exchange of the un-exploded input (hash partitioning
-        # on cell_id alone satisfies every downstream distribution).
-        pooled = None
+        # all (legacy:159-161). No window pass: hash partitioning on
+        # cell_id alone satisfies both aggregates of the fused cascade.
         base = d.filter(in_base).repartition("cell_id")
-        if output == "arrays" and exact and not strict_nan:
-            # fused per-cell form: two aggregates, no 11x exploded
-            # shuffle, no persist barrier (see _grid_clim_arrays_fused)
-            if not densify:
-                raise ValueError(
-                    "output='arrays' is inherently dense (366 slots/cell); "
-                    "densify=False only applies to output='rows'"
-                )
-            return _grid_clim_arrays_fused(
-                base,
-                pctile=pctile,
-                window_half_width=window_half_width,
-                feb29_interp=feb29_interp,
-                smooth_width=smooth_width,
-                smooth_mode=smooth_mode,
-            )
-        W = window_half_width
-        offs = F.explode(F.sequence(F.lit(-W), F.lit(W))).alias("__o")
-
-        # ONE aggregate over ONE scan of the source feeds all three
-        # consumers below (non-wrap contributions, wrapped edge rows,
-        # per-cell year extents). Without the persist barrier, Catalyst
-        # pushes each consumer's filters/pruning into its own copy of
-        # the subtree, the copies stop being canonically equal, exchange
-        # reuse never fires, and the SOURCE is scanned once per branch
-        # (measured: 3 FileScans + 3 daily-agg shuffles in the final
-        # AQE plan) — at 100 TB that triples the most expensive stage.
-        # The cached table is cells x 366 rows (the daily series
-        # compressed ~n_years x), partitioned by cell_id, which
-        # satisfies every downstream distribution. materialize=False
-        # keeps the old duplicated-subtree behavior for plan tests.
-        edge = (F.col("doy") <= W) | (F.col("doy") > 366 - W)
-        miss = F.col("temp").isNull().cast("int")
-        dg_aggs = [
-            F.collect_list("temp").alias("__v"),
-            F.sum("temp").alias("__s"),
-            F.count("temp").alias("__c"),
-            F.min(F.year("time")).alias("__dg_y0"),
-            F.max(F.year("time")).alias("__dg_y1"),
-            # per-sample (year, temp) pairs, kept ONLY for the ~2W/366
-            # edge DOYs whose wraps need per-sample year gating
-            # (collect_list skips the NULL struct of non-edge rows but
-            # keeps edge structs whose temp field is NULL)
-            F.collect_list(
-                F.when(
-                    edge,
-                    F.struct(F.year("time").alias("y"), F.col("temp").alias("t")),
-                )
-            ).alias("__edge_rows"),
-        ]
-        if strict_nan:
-            dg_aggs.append(F.max(miss).alias("__m"))
-        day_groups = base.groupBy("cell_id", "doy").agg(*dg_aggs)
-        if materialize:
-            day_groups = day_groups.persist()
-
-        # non-wrap: whole day-groups contribute to in-range targets
-        t_nw = F.col("doy") + F.col("__o")
-        contrib_cols = ["__v", "__s", "__c"] + (["__m"] if strict_nan else [])
-        nw = (
-            day_groups.select("cell_id", "doy", *contrib_cols, offs)
-            .filter(t_nw.between(1, 366) & (t_nw != FEB29))
-            .select("cell_id", t_nw.alias("doy"), *contrib_cols)
+        arrs = _grid_clim_arrays_fused(
+            base,
+            pctile=pctile,
+            window_half_width=window_half_width,
+            present_doys=not densify,
         )
-
-        # wrapped: edge-DOY samples contribute as singleton day-groups.
-        # A wrap survives iff the sample's year has an ADJACENT GRID ROW
-        # in the wrap direction: the reference pivots to rows of years
-        # PRESENT in the baseline-filtered data and pads each row from
-        # the neighboring ROW, NaN at the grid edges
-        # (_build_cross_year_pad:24-58 operates on the unstacked year
-        # axis, not the calendar) — so the gate is the cell's first/last
-        # present year, NOT the baseline range (which diverges whenever
-        # the range extends beyond the data, or no baseline is given).
-        # The extent table is one tiny row per cell, aggregated from the
-        # cached day groups and broadcast into the edge branch.
-        t_raw = F.col("doy") + F.col("__o")
-        t_wrap = ((t_raw - 1 + 366) % 366) + 1
-        yext = day_groups.groupBy("cell_id").agg(
-            F.min("__dg_y0").alias("__y_min"),
-            F.max("__dg_y1").alias("__y_max"),
-        )
-        yr = F.col("__r.y")
-        tv = F.col("__r.t")
-        wrap_ok = F.when(t_raw > 366, yr < F.col("__y_max")).otherwise(
-            yr > F.col("__y_min")
-        )
-        row_cols = [
-            F.filter(F.array(tv), lambda x: x.isNotNull()).alias("__v"),
-            tv.alias("__s"),
-            tv.isNotNull().cast("long").alias("__c"),
-        ]
-        if strict_nan:
-            row_cols.append(tv.isNull().cast("int").alias("__m"))
-        wrapped = (
-            day_groups.filter(edge)
-            .select("cell_id", "doy", F.explode("__edge_rows").alias("__r"))
-            .join(F.broadcast(yext), "cell_id")
-            .select("cell_id", "doy", "__r", "__y_min", "__y_max", offs)
-            .filter(~t_raw.between(1, 366) & wrap_ok & (t_wrap != FEB29))
-            .select("cell_id", t_wrap.alias("doy"), *row_cols)
-        )
-
-        # ONE aggregate over the union — both branches are partitioned
-        # by cell_id already, so no join and no further exchange
-        contrib = nw.unionByName(wrapped)
-        if exact:
-            bucket_aggs = [
-                F.when(F.sum("__c") > 0, F.sum("__s") / F.sum("__c")).alias(
-                    "seas"
-                ),
-                F.sort_array(F.flatten(F.collect_list("__v"))).alias(
-                    "__sorted"
-                ),
-            ]
-            if strict_nan:
-                bucket_aggs.append(F.max("__m").alias("__has_missing"))
-            clim = contrib.groupBy("cell_id", "doy").agg(*bucket_aggs)
-        else:
-            # documented scale escape hatch (SURVEY.md §4): fixed-size
-            # t-digest sketch instead of per-bucket value buffers —
-            # bounded memory per bucket no matter how many baseline
-            # years pool into it
-            vals = contrib.select(
-                "cell_id",
-                "doy",
-                F.explode_outer("__v").alias("__val"),
-                *(["__m"] if strict_nan else []),
-            )
-            bucket_aggs = [
-                F.avg("__val").alias("seas"),
-                F.expr(
-                    f"approx_percentile(__val, {pctile / 100.0!r}, 10000)"
-                ).alias("thresh"),
-            ]
-            if strict_nan:
-                bucket_aggs.append(F.max("__m").alias("__has_missing"))
-            clim = vals.groupBy("cell_id", "doy").agg(*bucket_aggs)
-    else:
-        raise ValueError(f"unknown pool_mode {pool_mode!r}")
-
-    if pooled is not None:
-        aggs = [F.avg("temp").alias("seas")]
-        if exact:
-            aggs.append(F.sort_array(F.collect_list("temp")).alias("__sorted"))
-        else:
-            aggs.append(
-                F.expr(
-                    f"approx_percentile(temp, {pctile / 100.0!r}, 10000)"
-                ).alias("thresh")
-            )
-        if strict_nan:
-            aggs.append(
-                F.max(F.col("temp").isNull().cast("int")).alias("__has_missing")
-            )
-        clim = pooled.groupBy("cell_id", "doy").agg(*aggs)
-    if "__sorted" in clim.columns:
-        clim = clim.withColumn(
-            "thresh", exact_percentile_sorted(F.col("__sorted"), pctile / 100.0)
-        ).drop("__sorted")
-    if strict_nan:
-        clim = clim.select(
-            "cell_id",
-            "doy",
-            F.when(F.col("__has_missing") == 0, F.col("seas")).alias("seas"),
-            F.when(F.col("__has_missing") == 0, F.col("thresh")).alias("thresh"),
-        )
-
-    if output == "arrays":
-        # Single-consumer dense-array form (see clim_arrays): the whole
-        # tail — densify + Feb 29 + circular smooth — becomes per-cell
-        # array transforms on the agg output (O(cells) rows), and the
-        # caller broadcasts one row per cell instead of cells*366.
-        # materialize is intentionally a no-op here: the array table is
-        # consumed exactly once by the severity join, whose broadcast
-        # materializes it anyway.
         if not densify:
-            raise ValueError(
-                "output='arrays' is inherently dense (366 slots/cell); "
-                "densify=False only applies to output='rows'"
-            )
-        return clim_arrays(
-            clim,
+            return _clim_rows(arrs, F.element_at("__present", F.col("doy")))
+        arrs = _arrays_tail(
+            arrs,
+            ("seas", "thresh"),
             feb29=feb29_interp,
             smooth_width=smooth_width,
             smooth_mode=smooth_mode,
         )
-    if output != "rows":
-        raise ValueError(f"unknown output {output!r}")
-    if materialize:
-        clim = clim.persist()
-    if densify:
-        # Cell universe from the (tiny, persisted) aggregate, not a
-        # second scan of the source: a cell with no baseline samples
-        # has no clim rows either way (reference reindexes over doy
-        # only: legacy/climatology.py:79).
-        clim = densify_doy(clim)
-    if feb29_interp:
-        clim = interp_feb29(clim)
-    if smooth_width:
-        clim = smooth_doy_circular(clim, width=smooth_width, mode=smooth_mode)
-    return clim.select("cell_id", "doy", "seas", "thresh")
+    else:
+        raise ValueError(f"unknown pool_mode {pool_mode!r}")
+
+    if output == "arrays":
+        return arrs
+    if smooth_width and smooth_mode == "valid":
+        # the doy -> value maps hold exactly the present DOYs
+        return _clim_rows(arrs, F.element_at("seas_arr", F.col("doy")).isNotNull())
+    return _clim_rows(arrs)
 
 
 def simple_climatology(
@@ -1003,9 +865,7 @@ def clim_partials(
     a full-history rescan. count/sum/min/max form commutative monoids,
     so merging is associative and layout-independent. Exact linear-
     interpolation percentiles are deliberately NOT in the state — they
-    do not merge; the documented scale path for mergeable quantiles is
-    the approx_percentile t-digest sketch (see pooled_climatology
-    exact=False).
+    do not merge.
     """
     return (
         ts.groupBy(

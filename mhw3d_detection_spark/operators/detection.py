@@ -809,7 +809,6 @@ def event_metrics(
     thresh_col: str = "thresh",
     with_rates: bool = True,
     with_categories: bool = True,
-    broadcast_events: bool = True,
     enriched: bool = False,
 ) -> DataFrame:
     """Per-event intensity / category / rate metrics
@@ -885,13 +884,9 @@ def event_metrics(
     # on the date value. The member-days side is events x duration —
     # orders of magnitude smaller than the series — so broadcast it
     # explicitly rather than letting a full-series shuffle join sneak in
-    # (AQE only broadcasts when stats are known pre-shuffle). Disable
-    # broadcast_events when total event-days outgrow executor memory;
-    # the join then shuffles on the same (cell, day) key as the series.
-    if broadcast_events:
-        member = F.broadcast(member)
+    # (AQE only broadcasts when stats are known pre-shuffle).
     j = d.withColumn("__day", F.to_date("time")).join(
-        member,
+        F.broadcast(member),
         ["cell_id", "__day"],
         "inner",
     )

@@ -25,7 +25,6 @@ def calculate_severity(
     time_col: str = "time",
     temp_col: str = "temp",
     mode: str = "legacy",
-    broadcast_clim: bool = True,
 ) -> DataFrame:
     """Join the (tiny) climatology dim table to the (huge) series and
     project anomaly + severity.
@@ -34,7 +33,7 @@ def calculate_severity(
     (the reference ships it into every dask task for the same reason,
     speed_benchmark.ipynb cell 8's graph-size warning).
     """
-    c = F.broadcast(clim) if broadcast_clim else clim
+    c = F.broadcast(clim)
     if "seas_arr" in clim.columns:
         # Dense-array clim (pooled_climatology(output="arrays")): one row
         # per cell, seas/thresh read out by DOY slot. The broadcast table

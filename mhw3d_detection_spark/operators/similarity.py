@@ -486,8 +486,7 @@ def semantic_dedup(
     bounded by the cap, not by the skew of the embedding space (see
     :func:`bucket_near_dup_pairs` for the recall trade).
 
-    ``broadcast_drops`` gates the final anti join exactly like
-    ``severity.calculate_severity(broadcast_clim=...)``: the drop list
+    ``broadcast_drops`` gates the final anti join: the drop list
     is dup-count-sized — tiny at low dup rates, CORPUS-sized at high
     ones (a 50 %-dup crawl drops half the corpus). True ships it to
     every task; False takes the plain shuffling left-anti join, the

@@ -45,7 +45,6 @@ def detect_mhw(
     clim_ts: DataFrame | None = None,
     with_rates: bool = True,
     with_categories: bool = True,
-    materialize_input: bool = False,
     pool_mode: str = "series",
 ) -> DataFrame:
     """Full MHW detection: long-format series -> per-event metrics table.
@@ -74,13 +73,6 @@ def detect_mhw(
     # exchange (operators/climatology.py clim_arrays).
     clim_output = "arrays"
     ts_s = signed(ts)
-    if materialize_input:
-        # The cleaned daily series feeds two independent subtrees (the
-        # clim aggregate and the severity join); when it is itself a
-        # derived aggregate (e.g. raw samples -> daily means), persist
-        # it so the upstream shuffle runs once. Off by default: at
-        # 100 TB the caller decides whether the series fits the cache.
-        ts_s = ts_s.persist()
     clim_src = signed(clim_ts) if clim_ts is not None else ts_s
     clim = pooled_climatology(
         clim_src,

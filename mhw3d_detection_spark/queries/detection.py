@@ -910,7 +910,7 @@ def q_mhw_pipeline(spark, sf_dir):
     m = detect_mhw(
         od,
         baseline=(1995, 2000),
-        smooth_mode="valid",  # M3 Ly variant: row-form compressed smooth
+        smooth_mode="valid",  # M3 Ly variant: compressed-circular map smooth
         min_duration=MIN_DUR,
         max_gap=MAX_GAP,
         with_rates=True,
@@ -923,9 +923,10 @@ def q_mhw_pipeline(spark, sf_dir):
 @register("q_mhw_pipeline_dense", PIPE_METRICS_SQL_DENSE)
 def q_mhw_pipeline_dense(spark, sf_dir):
     """The DEFAULT detect_mhw plan: smooth_mode="full" selects the
-    dense-array clim tail (pooled_climatology(output="arrays") ->
-    clim_arrays -> array-readout severity join, plans/pipeline.py:75;
-    operators/climatology.py:222-304) — the path the bench exercises.
+    dense 366-slot clim arrays (pooled_climatology(output="arrays") ->
+    array-readout severity join, plans/pipeline.py detect_mhw;
+    operators/climatology.py _arrays_tail) — the path the bench
+    exercises.
     Same oracle as q_mhw_pipeline: on this dense daily series the
     dense-366 and compressed-circular smoothers coincide, so this row
     pins the arrays path end to end under the DuckDB hash gate."""

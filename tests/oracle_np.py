@@ -42,7 +42,7 @@ def grid_clim_threshold_np(
     baseline samples pivot to a (year, 366) grid; each row gets left/
     right pads copied from the ADJACENT GRID ROW's last/first W columns
     (NaN where no adjacent row exists); bucket t pools columns t-W..t+W
-    of every padded row. Independent of the engine's explode+wrap
+    of every padded row. Independent of the engine's slice+wrap
     formulation — a conceptual error there cannot hide here."""
     W = window_half_width
     doy = clim_doy_np(times)

@@ -4,6 +4,7 @@ leap-only data, tests/test_threshold.py:84,91 at atol=1e-10)."""
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from mhw3d_detection_spark.operators.climatology import pooled_climatology
 from tests.fixtures_mhw import leap_only_series, oliver_synthetic
@@ -59,8 +60,9 @@ def test_full_mixed_year_exact_vs_np(spark):
 def test_grid_mode_mixed_years_vs_pad_oracle(spark):
     # grid mode on MIXED leap/non-leap years vs an independent NumPy
     # oracle built the reference's own way (pivot + cross-year pads,
-    # legacy/climatology.py:24-58) — the engine's explode+wrap
-    # formulation and the pad formulation must agree exactly. This is
+    # legacy/climatology.py:24-58) — the engine's day-group slice +
+    # year-gated wrap formulation and the pad formulation must agree
+    # exactly. This is
     # the check the DuckDB oracle can't provide (it shares the
     # engine's formulation).
     pdf = oliver_synthetic()
@@ -162,29 +164,40 @@ import pytest
     ],
 )
 def test_arrays_valid_mode_matches_row_path(spark, keep):
-    # clim_arrays(smooth_mode="valid") must reproduce the row path
-    # (densify -> feb29 -> smooth_doy_circular mode="valid") slot for
-    # slot on SPARSE DOY data — including NaN poisoning, the
+    # clim_arrays(smooth_mode="valid") must reproduce the row-form
+    # reference (densify -> feb29 -> smooth_doy_circular mode="valid")
+    # slot for slot on SPARSE DOY data — including NaN poisoning, the
     # compressed-circular wrap, and edge-truncated windows when the
-    # valid sequence is shorter than the smoothing width.
-    import pandas as pd
+    # valid sequence is shorter than the smoothing width. Both start
+    # from the same raw pooled buckets.
     from pyspark.sql import functions as F
 
-    from mhw3d_detection_spark.operators.climatology import _denanify
+    from mhw3d_detection_spark.operators.climatology import (
+        _denanify,
+        clim_arrays,
+        densify_doy,
+        interp_feb29,
+        smooth_doy_circular,
+    )
 
     pdf = oliver_synthetic()
     doy_np = pd.DatetimeIndex(pdf["time"]).dayofyear
     pdf = pdf[keep(doy_np)]
 
-    kw = dict(baseline=(1983, 2012), pool_mode="grid", smooth_mode="valid")
+    raw = pooled_climatology(
+        spark.createDataFrame(pdf),
+        baseline=(1983, 2012),
+        pool_mode="grid",
+        smooth_width=None,
+        feb29_interp=False,
+        densify=False,
+    )
     rows = (
-        pooled_climatology(spark.createDataFrame(pdf), **kw)
+        smooth_doy_circular(interp_feb29(densify_doy(raw)), mode="valid")
         .orderBy("doy")
         .toPandas()
     )
-    arr = pooled_climatology(
-        spark.createDataFrame(pdf), output="arrays", **kw
-    )
+    arr = clim_arrays(raw, smooth_mode="valid")
     doys = spark.range(1, 367).select(F.col("id").cast("int").alias("doy"))
     readout = (
         arr.crossJoin(doys)
@@ -214,22 +227,6 @@ def test_arrays_valid_mode_matches_row_path(spark, keep):
         )
         # absent slots must read back NULL
         assert merged.loc[~present, f"{c}_arr"].isna().all()
-
-
-def test_approx_percentile_escape_hatch(spark):
-    # exact=False (the documented 100-TB fallback, SURVEY §4): sketch-
-    # based threshold within a small tolerance of the exact one, for
-    # both pooling modes
-    pdf = oliver_synthetic()
-    for mode in ("grid", "series"):
-        ex = _spark_clim(
-            spark, pdf, pool_mode=mode, baseline=(1983, 2012)
-        )
-        ap = _spark_clim(
-            spark, pdf, pool_mode=mode, baseline=(1983, 2012), exact=False
-        )
-        np.testing.assert_allclose(ap["seas"], ex["seas"], atol=1e-9)
-        np.testing.assert_allclose(ap["thresh"], ex["thresh"], atol=0.05)
 
 
 def test_strict_nan_semantics(spark):
@@ -302,3 +299,120 @@ def test_clim_partials_merge_invariance(spark):
         if ra["seas_strict"] is None and ra["seas"] is not None:
             strict_nulls += 1
     assert strict_nulls > 0  # the strict rule actually fired somewhere
+
+
+def test_grid_raw_rows_keep_all_null_pools(spark):
+    # densify=False grid rows are the buckets that RECEIVED samples,
+    # whatever their values: a bucket pooling only NULL temps is a
+    # (NULL, NULL) row, through the non-wrap window and through a
+    # year-gated cross-year wrap alike. Non-leap years, so a clim DOY
+    # is the calendar day-of-year + 1 from Mar 1 on.
+    import datetime as dt
+
+    rows = []
+    for y, v in ((2001, 10.0), (2002, 11.0), (2003, 12.0)):
+        rows.append((0, dt.date(y, 5, 29), v))  # clim DOY 150
+        rows.append((0, dt.date(y, 9, 6), None))  # clim DOY 250
+    rows.append((0, dt.date(2002, 1, 2), None))  # wraps: 2002 > first year
+    rows.append((0, dt.date(2001, 1, 3), None))  # gated: the first year
+    ts = spark.createDataFrame(rows, "cell_id int, time date, temp double")
+
+    got = {
+        r["doy"]: (r["seas"], r["thresh"])
+        for r in pooled_climatology(
+            ts,
+            pool_mode="grid",
+            smooth_width=None,
+            feb29_interp=False,
+            densify=False,
+        ).collect()
+    }
+    valued = set(range(145, 156))
+    null_pools = set(range(245, 256)) | set(range(1, 9)) | set(range(363, 367))
+    assert set(got) == valued | null_pools
+    for d in valued:
+        assert got[d][0] == pytest.approx(11.0)
+        assert got[d][1] == pytest.approx(11.8)  # linear 90th of 10, 11, 12
+    assert all(got[d] == (None, None) for d in null_pools)
+
+
+def test_valid_rows_keep_present_doys_with_nan_smooths(spark):
+    # output="rows" in valid mode emits every PRESENT DOY (the map's
+    # entries), including one whose smoothed seas AND thresh are NaN:
+    # it is a (NULL, NULL) row, exactly like the row-form reference
+    # (densify -> feb29 -> smooth_doy_circular mode="valid").
+    # Two baseline years, so every non-wrap pool holds 22 samples. A
+    # NaN temp on DOY 170 makes seas NaN for buckets 165-175 while
+    # thresh stays finite (NaN sorts last, above the 90th percentile);
+    # four +inf temps on DOYs 200-203 make thresh NaN (inf - inf) for
+    # buckets 198-205 while seas is +inf. DOYs 300-330 are absent.
+    import datetime as dt
+
+    from mhw3d_detection_spark.functions.calendar import clim_doy
+    from mhw3d_detection_spark.operators.climatology import (
+        densify_doy,
+        interp_feb29,
+        smooth_doy_circular,
+    )
+
+    rows = []
+    for y in (2001, 2002):
+        day = dt.date(y, 1, 1)
+        while day.year == y:
+            k = day.timetuple().tm_yday
+            rows.append((0, day, 20.0 + (k * 7 % 13) / 10.0))
+            day += dt.timedelta(days=1)
+    ts = spark.createDataFrame(rows, "cell_id int, time date, temp double")
+    d = clim_doy(F.col("time"))
+    odd = (
+        F.when((F.year("time") == 2001) & (d == 170), float("nan"))
+        .when((F.year("time") == 2001) & d.between(200, 203), float("inf"))
+        .otherwise(F.col("temp"))
+    )
+    ts = ts.withColumn("temp", odd).filter(~d.between(300, 330))
+
+    got = (
+        pooled_climatology(ts, pool_mode="grid", smooth_mode="valid")
+        .orderBy("doy")
+        .toPandas()
+    )
+    raw = pooled_climatology(
+        ts, pool_mode="grid", smooth_width=None, feb29_interp=False,
+        densify=False,
+    )
+    ref = (
+        smooth_doy_circular(interp_feb29(densify_doy(raw)), mode="valid")
+        .orderBy("doy")
+        .toPandas()
+    )
+    assert list(got["doy"]) == list(ref["doy"])
+    assert len(got) == 366 - 21  # buckets 305-325 pool no sample
+    both_null = got["seas"].isna() & got["thresh"].isna()
+    assert both_null.any()
+    for c in ("seas", "thresh"):
+        np.testing.assert_allclose(
+            got[c].values.astype(float),
+            ref[c].values.astype(float),
+            rtol=1e-12,
+            equal_nan=True,
+        )
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(pool_mode="grid", strict_nan=True),
+        dict(densify=False, smooth_width=None),  # Feb-29 interp is on
+        dict(densify=False, feb29_interp=False),  # smoothing is on
+        dict(
+            densify=False, feb29_interp=False, smooth_width=None,
+            output="arrays",
+        ),
+    ],
+)
+def test_unsupported_combinations_raise(spark, kw):
+    ts = spark.createDataFrame(
+        leap_only_series().head(10)
+    )
+    with pytest.raises(ValueError):
+        pooled_climatology(ts, **kw)

@@ -59,17 +59,20 @@ def test_clim_lookup_is_broadcast_join(spark, sf_dir):
         F.to_date("o_orderdate").alias("time"),
     ).agg(F.avg("o_totalprice").alias("temp"))
     clim = pooled_climatology(
-        ts, baseline=(1995, 2000), smooth_width=None, pool_mode="grid",
-        materialize=False,
+        ts, baseline=(1995, 2000), smooth_width=None, pool_mode="grid"
     )
     sev = calculate_severity(ts, clim)
     plan = _executed(sev)
     assert "BroadcastHashJoin" in plan  # J1 must broadcast the clim dim
 
 
-def test_grid_pooling_single_exchange(spark, sf_dir):
-    # The windowless scale path: ONE hash exchange of the (un-exploded)
-    # series; explode + partial/final aggregate all run co-partitioned.
+def test_grid_rows_read_from_fused_cascade(spark, sf_dir):
+    # The grid row form (densify=False: the component queries' raw
+    # pooled buckets) is read back from the same fused per-cell cascade
+    # as the arrays: no cached day groups, no broadcast year-extent
+    # join, and at most three hash exchanges — the input groupBy that
+    # builds ts, the operator's repartition("cell_id"), and slack for
+    # one more; both aggregates reuse the cell_id partitioning.
     o = load_table(spark, sf_dir, "orders")
     ts = o.groupBy(
         (F.col("o_custkey") % 10).alias("cell_id"),
@@ -77,15 +80,12 @@ def test_grid_pooling_single_exchange(spark, sf_dir):
     ).agg(F.avg("o_totalprice").alias("temp"))
     clim = pooled_climatology(
         ts, baseline=(1995, 2000), smooth_width=None, feb29_interp=False,
-        densify=False, materialize=False, pool_mode="grid",
+        densify=False, pool_mode="grid",
     )
     plan = _executed(clim)
-    gen = plan.index("Generate explode")
-    # below the explode: the pre-pool repartition + the input groupBy;
-    # above it: partial+final agg with NO further exchange
-    above = plan[:gen]
-    assert _count_exchanges(above) == 0, above
-    assert "partial_collect_list" in plan or "partial_" in plan
+    assert "InMemoryTableScan" not in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert _count_exchanges(plan) <= 3, plan
 
 
 def test_grid_arrays_fused_two_aggregates_no_explode(spark, sf_dir):
@@ -252,7 +252,7 @@ def test_window_partitioning_reused_by_aggregate(spark, sf_dir):
     )
     clim = pooled_climatology(
         ts, smooth_width=None, feb29_interp=False, densify=False,
-        materialize=False, pool_mode="series",
+        pool_mode="series",
     )
     plan = _executed(clim)
     assert _count_exchanges(plan) == 1, plan
