@@ -10,7 +10,6 @@ from mhw3d_detection_spark.operators.detection import (  # noqa: F401
     detect_events,
     detect_partials,
     enrich_series,
-    event_metrics,
     exceedance,
     fused_detect_metrics,
     merge_detect_partials,

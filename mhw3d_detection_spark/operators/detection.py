@@ -22,12 +22,11 @@ iterative gap-merge loop:
        marineHeatWaves.py:330-345); a single cumulative-sum pass is
        equivalent because merging is chain-transitive (A-B merge never
        *increases* the B-C gap).
-4. A5/W6/W7  metrics. Production (:func:`fused_detect_metrics`): each
-       run carries mergeable metric partials, and one
-       ``groupBy(cell, event)`` merges an event's member runs.
-       Component path (:func:`event_metrics`): expand each event to its
-       member days (``explode(sequence(start, end))``) and equi-join
-       back to the series.
+4. A5/W6/W7  metrics (:func:`fused_detect_metrics`): each run carries
+       mergeable metric partials, and one ``groupBy(cell, event)``
+       merges an event's member runs. Every per-event metric, in the
+       pipeline and in the component queries alike, is a readout of
+       these run partials.
 
 Shuffle budget of the production flow: ONE hash exchange of the series
 on ``cell_id`` (the W3 window). The (cell, run) partial aggregate, the
@@ -39,7 +38,7 @@ Catalyst/AQE handle skew, partial aggregation and partition coalescing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from mhw3d_detection_spark.functions.scalar import CATEGORIES
@@ -88,12 +87,9 @@ def enrich_series(
     separate exchange+sort subtrees, the dominant cost at scale.
     """
     w = Window.partitionBy(cell_col).orderBy(time_col)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.partitionBy(cell_col)
 
     flag = F.coalesce(F.col(flag_col), F.lit(False))
-    lagged = F.lag(flag).over(w)
-    changed = F.when(lagged.isNull() | (flag != lagged), 1).otherwise(0)
     rel_seas = F.col(temp_col) - F.col(seas_col)
 
     # single batched projection: one analysis pass, one Window node
@@ -109,9 +105,21 @@ def enrich_series(
             "series_start": F.min(time_col).over(wall),
             "series_end": F.max(time_col).over(wall),
             "__flag": flag,
-            "__run": F.sum(changed).over(wcum).cast("long"),
+            "__run": _run_ids(flag, w).cast("long"),
         }
     )
+
+
+def _run_ids(flag: Column, w: WindowSpec) -> Column:
+    """Gaps-and-islands run ids over the ordered window ``w``: a change
+    point wherever ``flag`` differs from the previous row's (or there is
+    no previous row), and the running count of change points as the id
+    (reference RLE kernel common/core.py:53-69). The one RLE expression
+    behind :func:`rle_runs`, :func:`enrich_series` and the cross-batch
+    run coalescing of :func:`merge_detect_partials`."""
+    lagged = F.lag(flag).over(w)
+    changed = F.when(lagged.isNull() | (flag != lagged), 1).otherwise(0)
+    return F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
 
 
 def rle_runs(
@@ -122,27 +130,23 @@ def rle_runs(
     flag_col: str = "exceed",
     min_duration: int = 1,
 ) -> DataFrame:
-    """W3+W4: run-length encode a boolean series into
+    """W3+W4 readout: run-length encode a boolean series into
     ``runs(cell_id, run_id, run_start, run_end, run_days)``, keeping
-    runs of at least ``min_duration`` rows.
+    runs of at least ``min_duration`` rows — the run table the
+    ``q_rle_runs`` / ``q_min_duration_filter`` rows and the streaming
+    parity tests read. Per-event metrics never go through it; they come
+    from the run partials of :func:`fused_detect_metrics`.
 
-    Gaps-and-islands: change-point flag vs the lagged value, cumulative
-    sum as run id (reference RLE kernel common/core.py:53-69; Oliver
-    uses scipy.ndimage.label, marineHeatWaves.py:319-327). ``run_id``
-    numbers both true and false runs (only true runs survive), so ids
-    are increasing but not consecutive — both engines derive them the
-    same way.
+    Gaps-and-islands (:func:`_run_ids`; Oliver uses scipy.ndimage.label,
+    marineHeatWaves.py:319-327). ``run_id`` numbers both true and false
+    runs (only true runs survive), so ids are increasing but not
+    consecutive — both engines derive them the same way.
     """
     w = Window.partitionBy(cell_col).orderBy(time_col)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-
     flag = F.coalesce(F.col(flag_col), F.lit(False))
-    lagged = F.lag(flag).over(w)
-    changed = F.when(lagged.isNull() | (flag != lagged), 1).otherwise(0)
 
     return (
-        ts.withColumn("__flag", flag)
-        .withColumn("run_id", F.sum(changed).over(wcum).cast("long"))
+        ts.withColumns({"__flag": flag, "run_id": _run_ids(flag, w).cast("long")})
         .filter(F.col("__flag"))
         .groupBy(cell_col, "run_id")
         .agg(
@@ -163,39 +167,26 @@ def detect_events(
     min_duration: int = 5,
     max_gap: int = 2,
     join_across_gaps: bool = True,
-    run_col: str | None = None,
 ) -> DataFrame:
-    """Sessionize a boolean series into events(cell_id, event_id,
-    date_start, date_end, duration).
+    """W5 readout: sessionize a boolean series into events(cell_id,
+    event_id, date_start, date_end, duration) — the event table the
+    ``q_gap_join_events`` family and the streaming parity tests read.
+    Events that need metrics come from :func:`fused_detect_metrics`,
+    which shares the same gap assembly (:func:`_assemble_events`).
 
     Implements W3 (RLE), W4 (min-duration HAVING) and W5 (gap joining)
     from SURVEY.md §2.6; semantics match marineHeatWaves.py:319-345 and
     common/core.py:53-74. ``duration`` counts every calendar day from
     start to end inclusive (joined gaps count: marineHeatWaves.py:371
     takes ``len(temp[tt_start:tt_end+1])``).
-
-    ``run_col`` short-circuits the RLE window pass when the input is an
-    :func:`enrich_series` output that already carries run ids.
     """
-    if run_col is not None:
-        runs = (
-            ts.filter(F.col(flag_col))
-            .groupBy(cell_col, F.col(run_col).alias("__run"))
-            .agg(
-                F.min(time_col).alias("run_start"),
-                F.max(time_col).alias("run_end"),
-                F.count(F.lit(1)).alias("run_days"),
-            )
-            .filter(F.col("run_days") >= min_duration)
-        )
-    else:
-        runs = rle_runs(
-            ts,
-            cell_col=cell_col,
-            time_col=time_col,
-            flag_col=flag_col,
-            min_duration=min_duration,
-        ).withColumnRenamed("run_id", "__run")
+    runs = rle_runs(
+        ts,
+        cell_col=cell_col,
+        time_col=time_col,
+        flag_col=flag_col,
+        min_duration=min_duration,
+    ).withColumnRenamed("run_id", "__run")
 
     return _assemble_events(
         runs,
@@ -204,12 +195,6 @@ def detect_events(
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
     )
-
-
-def _sqrt_var_pop(c: Column) -> Column:
-    """np.var is ddof=0 -> var_pop; reference takes sqrt(var), i.e. the
-    population standard deviation (marineHeatWaves.py:373)."""
-    return F.sqrt(F.var_pop(c))
 
 
 def _assemble_events(
@@ -225,7 +210,7 @@ def _assemble_events(
     cell's runs (``__run`` increasing in time), then one
     ``groupBy(cell, event)`` with the extra per-event ``aggs``. Shared
     by :func:`detect_events` and :func:`fused_detect_metrics` so the gap
-    semantics cannot drift between the component and fused paths.
+    semantics cannot drift between the event table and the metrics.
 
     A ``qualifies`` run opens a new event unless the gap since the last
     qualifying run's end is <= ``max_gap`` (always opens without
@@ -271,64 +256,6 @@ def _assemble_events(
     )
 
 
-def _category_and_rates(
-    out: DataFrame,
-    *,
-    with_categories: bool,
-    with_rates: bool,
-    band_col: str,
-) -> DataFrame:
-    """S6 category readout + W7 onset/decline rate formulas
-    (marineHeatWaves.py:385-411: half-day boundary convention, 4 edge
-    cases at the series extremes) — the shared tail of
-    :func:`event_metrics` and :func:`fused_detect_metrics`. Expects
-    ``__tt_peak``, ``intensity_max``, ``duration``, the peak-band
-    column named by ``band_col`` (when with_categories) and the
-    ``__first/__last/__before/__after_rel_seas`` +
-    ``__starts/__ends_at_series_*`` boundary columns (when
-    with_rates)."""
-    if with_categories:
-        out = out.withColumn(
-            "category",
-            F.element_at(
-                F.array(*[F.lit(c) for c in CATEGORIES]),
-                F.least(F.col(band_col), F.lit(4)).cast("int"),
-            ),
-        ).drop(band_col)
-    if with_rates:
-        tt_peak = F.col("__tt_peak").cast("double")
-        imax = F.col("intensity_max")
-        dur = F.col("duration").cast("double")
-        onset = (
-            F.when(
-                ~F.col("__starts_at_series_start"),
-                (imax - 0.5 * (F.col("__first_rel_seas") + F.col("__before_rel_seas")))
-                / (tt_peak + 0.5),
-            )
-            .when(F.col("__tt_peak") == 0, F.lit(0.0))  # peak==first -> 0
-            .otherwise((imax - F.col("__first_rel_seas")) / tt_peak)
-        )
-        decline_days = dur - 1 - tt_peak
-        decline = (
-            F.when(
-                ~F.col("__ends_at_series_end"),
-                (imax - 0.5 * (F.col("__last_rel_seas") + F.col("__after_rel_seas")))
-                / (decline_days + 0.5),
-            )
-            .when(F.col("__tt_peak") == F.col("duration") - 1, F.lit(0.0))
-            .otherwise((imax - F.col("__last_rel_seas")) / decline_days)
-        )
-        out = out.withColumns({"rate_onset": onset, "rate_decline": decline}).drop(
-            "__first_rel_seas",
-            "__last_rel_seas",
-            "__before_rel_seas",
-            "__after_rel_seas",
-            "__starts_at_series_start",
-            "__ends_at_series_end",
-        )
-    return out.drop("__tt_peak")
-
-
 def fused_detect_metrics(
     enriched: DataFrame,
     *,
@@ -343,12 +270,12 @@ def fused_detect_metrics(
     """Detection + per-event metrics in ONE pass over the series: the
     production tail of :func:`~mhw3d_detection_spark.plans.detect_mhw`.
 
-    The separate ``detect_events`` + ``event_metrics`` composition
-    consumes the enriched series twice (sessionization, then an
-    event-days join back) and therefore materializes the full big-table
-    window output. Here the big table is touched exactly once: a
-    per-(cell, run) aggregate computes *mergeable partials* for every
-    metric — sums / counts / sums-of-squares for the mean/var family,
+    Also the one metrics implementation behind every component query
+    (peaks, intensities, rates, categories, block averages, ranks):
+    those rows read their columns off this output. The big table is
+    touched exactly once: a per-(cell, run) aggregate computes
+    *mergeable partials* for every metric — sums / counts /
+    sums-of-squares for the mean/var family,
     argmax structs (value, earliest-day tie-break) for the peaks,
     category-band day counts, boundary values for the rate formulas —
     and everything downstream (min-duration filter, gap joining, the
@@ -583,13 +510,49 @@ def _metrics_from_partials(
         ),
     ).drop("__pk_key", "__pk_val")
 
-    out = _category_and_rates(
-        out,
-        with_categories=with_categories,
-        with_rates=with_rates,
-        band_col="__pkc_val",
-    )
-    return out.withColumnRenamed("cell_id", cell_col)
+    # S6 category readout + W7 onset/decline rate formulas
+    # (marineHeatWaves.py:385-411: half-day boundary convention, 4 edge
+    # cases at the series extremes)
+    if with_categories:
+        out = out.withColumn(
+            "category",
+            F.element_at(
+                F.array(*[F.lit(c) for c in CATEGORIES]),
+                F.least(F.col("__pkc_val"), F.lit(4)).cast("int"),
+            ),
+        ).drop("__pkc_val")
+    if with_rates:
+        tt_peak = F.col("__tt_peak").cast("double")
+        imax = F.col("intensity_max")
+        dur = F.col("duration").cast("double")
+        onset = (
+            F.when(
+                ~F.col("__starts_at_series_start"),
+                (imax - 0.5 * (F.col("__first_rel_seas") + F.col("__before_rel_seas")))
+                / (tt_peak + 0.5),
+            )
+            .when(F.col("__tt_peak") == 0, F.lit(0.0))  # peak==first -> 0
+            .otherwise((imax - F.col("__first_rel_seas")) / tt_peak)
+        )
+        decline_days = dur - 1 - tt_peak
+        decline = (
+            F.when(
+                ~F.col("__ends_at_series_end"),
+                (imax - 0.5 * (F.col("__last_rel_seas") + F.col("__after_rel_seas")))
+                / (decline_days + 0.5),
+            )
+            .when(F.col("__tt_peak") == F.col("duration") - 1, F.lit(0.0))
+            .otherwise((imax - F.col("__last_rel_seas")) / decline_days)
+        )
+        out = out.withColumns({"rate_onset": onset, "rate_decline": decline}).drop(
+            "__first_rel_seas",
+            "__last_rel_seas",
+            "__before_rel_seas",
+            "__after_rel_seas",
+            "__starts_at_series_start",
+            "__ends_at_series_end",
+        )
+    return out.drop("__tt_peak").withColumnRenamed("cell_id", cell_col)
 
 
 def detect_partials(
@@ -737,13 +700,7 @@ def merge_detect_partials(
 
     # 1. coalesce same-flag consecutive runs (gaps-and-islands over the
     # runs themselves)
-    changed = F.when(
-        F.lag("flag").over(w).isNull() | (F.col("flag") != F.lag("flag").over(w)),
-        1,
-    ).otherwise(0)
-    g = cent.withColumn(
-        "__g", F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    g = cent.withColumn("__g", _run_ids(F.col("flag"), w))
     merge_aggs = [
         F.first("flag").alias("flag"),
         F.min("run_start").alias("run_start"),
@@ -796,172 +753,3 @@ def merge_detect_partials(
         with_rates=with_rates,
         with_categories=with_categories,
     )
-
-
-def event_metrics(
-    ts_sev: DataFrame,
-    events: DataFrame,
-    *,
-    cell_col: str = "cell_id",
-    time_col: str = "time",
-    temp_col: str = "temp",
-    seas_col: str = "seas",
-    thresh_col: str = "thresh",
-    with_rates: bool = True,
-    with_categories: bool = True,
-    enriched: bool = False,
-) -> DataFrame:
-    """Per-event intensity / category / rate metrics
-    (A5 + W6 + W7 + W8 + S6 of SURVEY.md §2; semantics:
-    marineHeatWaves.py:350-411, common/core.py:89-127).
-
-    ``ts_sev`` must carry temp (already gap-filled with seas if that
-    mode is on), seas and thresh per (cell, day). Member days are
-    generated with ``explode(sequence(date_start, date_end))`` and
-    equi-joined back — at 100 TB this shuffles only (event-days) rows
-    on the same (cell, time) key as the series, and the events side is
-    AQE-broadcastable.
-
-    Peak = argmax of (temp - seas) with *earliest-day* tie-break
-    (np.argmax first-occurrence, marineHeatWaves.py:366); the category
-    peak is separately argmax of the normalized exceedance
-    (marineHeatWaves.py:385-388).
-    """
-    # Per-day series values needed at event boundaries (W7): the
-    # neighbors just outside the event and the series extent per cell.
-    # With enriched=True these come precomputed from enrich_series —
-    # no extra exchange+sort of the big table.
-    cols = [
-        "rel_seas",
-        "rel_thresh",
-        "rel_thresh_norm",
-        "t_abs",
-        "prev_rel_seas",
-        "next_rel_seas",
-        "series_start",
-        "series_end",
-    ]
-    if enriched:
-        d = ts_sev.select(
-            F.col(cell_col).alias("cell_id"),
-            F.col(time_col).alias("time"),
-            *cols,
-        )
-    else:
-        w = Window.partitionBy(cell_col).orderBy(time_col)
-        wall = Window.partitionBy(cell_col)
-        anom = F.col(temp_col) - F.col(seas_col)
-        d = ts_sev.select(
-            F.col(cell_col).alias("cell_id"),
-            F.col(time_col).alias("time"),
-            anom.alias("rel_seas"),
-            (F.col(temp_col) - F.col(thresh_col)).alias("rel_thresh"),
-            ((F.col(temp_col) - F.col(thresh_col)) / (F.col(thresh_col) - F.col(seas_col))).alias(
-                "rel_thresh_norm"
-            ),
-            F.col(temp_col).alias("t_abs"),
-        )
-        d = d.withColumns(
-            {
-                "prev_rel_seas": F.lag("rel_seas").over(w),
-                "next_rel_seas": F.lead("rel_seas").over(w),
-                "series_start": F.min("time").over(wall),
-                "series_end": F.max("time").over(wall),
-            }
-        )
-
-    member = events.select(
-        F.col(cell_col).alias("cell_id"),
-        "event_id",
-        "date_start",
-        "date_end",
-        "duration",
-        F.explode(
-            F.sequence(F.to_date("date_start"), F.to_date("date_end"))
-        ).alias("__day"),
-    )
-    # The series time axis may be DATE or day-resolution TIMESTAMP; join
-    # on the date value. The member-days side is events x duration —
-    # orders of magnitude smaller than the series — so broadcast it
-    # explicitly rather than letting a full-series shuffle join sneak in
-    # (AQE only broadcasts when stats are known pre-shuffle).
-    j = d.withColumn("__day", F.to_date("time")).join(
-        F.broadcast(member),
-        ["cell_id", "__day"],
-        "inner",
-    )
-
-    offset = F.datediff("__day", "date_start")  # 0-based index within event
-    is_first = F.col("__day") == F.to_date("date_start")
-    is_last = F.col("__day") == F.to_date("date_end")
-    cat_band = F.floor(F.lit(1.0) + F.col("rel_thresh_norm"))
-
-    def first_of(cond: Column, val: Column) -> Column:
-        return F.max(F.when(cond, val))
-
-    aggs = [
-        # W6 peak: earliest max of rel_seas
-        F.max_by(
-            F.struct(F.col("__day").alias("date_peak"), offset.alias("peak_offset")),
-            F.struct(F.col("rel_seas").alias("v"), (-offset).alias("tb")),
-        ).alias("__peak"),
-        F.max("rel_seas").alias("intensity_max"),
-        F.avg("rel_seas").alias("intensity_mean"),
-        _sqrt_var_pop(F.col("rel_seas")).alias("intensity_var"),
-        F.sum("rel_seas").alias("intensity_cumulative"),
-        F.avg("rel_thresh").alias("intensity_mean_relThresh"),
-        _sqrt_var_pop(F.col("rel_thresh")).alias("intensity_var_relThresh"),
-        F.sum("rel_thresh").alias("intensity_cumulative_relThresh"),
-        F.avg("t_abs").alias("intensity_mean_abs"),
-        _sqrt_var_pop(F.col("t_abs")).alias("intensity_var_abs"),
-        F.sum("t_abs").alias("intensity_cumulative_abs"),
-        # values *at* the rel_seas peak (earliest tie-break)
-        F.max_by(
-            F.struct(
-                F.col("rel_thresh").alias("rt"), F.col("t_abs").alias("ab")
-            ),
-            F.struct(F.col("rel_seas").alias("v"), (-offset).alias("tb")),
-        ).alias("__at_peak"),
-    ]
-    if with_categories:
-        aggs += [
-            # S6: category at the *normalized* peak (separate argmax)
-            F.max_by(cat_band, F.struct(F.col("rel_thresh_norm"), -offset)).alias(
-                "__peak_cat_band"
-            ),
-            F.sum((cat_band == 1).cast("long")).alias("duration_moderate"),
-            F.sum((cat_band == 2).cast("long")).alias("duration_strong"),
-            F.sum((cat_band == 3).cast("long")).alias("duration_severe"),
-            F.sum((cat_band >= 4).cast("long")).alias("duration_extreme"),
-        ]
-    if with_rates:
-        aggs += [
-            first_of(is_first, F.col("rel_seas")).alias("__first_rel_seas"),
-            first_of(is_last, F.col("rel_seas")).alias("__last_rel_seas"),
-            first_of(is_first, F.col("prev_rel_seas")).alias("__before_rel_seas"),
-            first_of(is_last, F.col("next_rel_seas")).alias("__after_rel_seas"),
-            first_of(is_first, F.col("__day") == F.to_date("series_start")).alias(
-                "__starts_at_series_start"
-            ),
-            first_of(is_last, F.col("__day") == F.to_date("series_end")).alias(
-                "__ends_at_series_end"
-            ),
-        ]
-
-    g = j.groupBy("cell_id", "event_id", "date_start", "date_end", "duration").agg(*aggs)
-
-    out = g.select(
-        "*",
-        F.col("__peak.date_peak").alias("date_peak"),
-        F.col("__peak.peak_offset").alias("__tt_peak"),
-        F.col("__at_peak.rt").alias("intensity_max_relThresh"),
-        F.col("__at_peak.ab").alias("intensity_max_abs"),
-    ).drop("__peak", "__at_peak")
-
-    out = _category_and_rates(
-        out,
-        with_categories=with_categories,
-        with_rates=with_rates,
-        band_col="__peak_cat_band",
-    )
-    return out.withColumnRenamed("cell_id", cell_col)

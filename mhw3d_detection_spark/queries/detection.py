@@ -27,8 +27,9 @@ from mhw3d_detection_spark.operators.analysis import (
 from mhw3d_detection_spark.operators.detection import (
     detect_events,
     detect_partials,
-    event_metrics,
+    enrich_series,
     exceedance,
+    fused_detect_metrics,
     merge_detect_partials,
     rle_runs,
 )
@@ -96,8 +97,7 @@ def _flagged(spark, sf_dir):
     # chain consumer immediately windows by (cell_id, time) anyway —
     # ordering the window here lets the RLE/enrich windows stack on the
     # SAME exchange + sort (one shuffle establishes the partitioning
-    # once), and identical flagged subtrees under that exchange dedupe
-    # via ReusedExchange in the double-consumer rows (q_event_metrics).
+    # once).
     # percentile is order-insensitive (sorted-buffer aggregate) so
     # `exceed` — the run-structure decider — is bit-identical; `seas`
     # accumulates in partition order vs partial-merge order, absorbed
@@ -123,6 +123,18 @@ def _flagged(spark, sf_dir):
 def _events(spark, sf_dir):
     return detect_events(
         _flagged(spark, sf_dir), min_duration=MIN_DUR, max_gap=MAX_GAP
+    )
+
+
+def _metrics(fl, *, with_rates=False, with_categories=False):
+    """Per-event metrics of a flagged series, read off its run partials
+    — the same :func:`fused_detect_metrics` readout the pipeline runs."""
+    return fused_detect_metrics(
+        enrich_series(fl),
+        min_duration=MIN_DUR,
+        max_gap=MAX_GAP,
+        with_rates=with_rates,
+        with_categories=with_categories,
     )
 
 
@@ -203,12 +215,7 @@ def q_event_peak_argmax(spark, sf_dir):
     """W6: within each event, the date of max T_anom; np.nanargmax takes
     the FIRST occurrence on ties -> explicit earliest-day tie-break
     (reference common/core.py:113-120; marineHeatWaves.py:366-369)."""
-    m = event_metrics(
-        _flagged(spark, sf_dir),
-        _events(spark, sf_dir),
-        with_rates=False,
-        with_categories=False,
-    )
+    m = _metrics(_flagged(spark, sf_dir))
     return m.select(
         "cell_id", "event_id", "date_peak", rq("intensity_max", 2).alias("intensity_max")
     )
@@ -245,16 +252,12 @@ def q_event_peak_argmax(spark, sf_dir):
     "FROM agg a JOIN peak p ON a.cell_id = p.cell_id AND a.event_id = p.event_id",
 )
 def q_event_metrics(spark, sf_dir):
-    """A5+W6: one hash aggregate per event over its member days —
-    duration/max/mean/var/cumulative for rel-seas, rel-thresh and
-    absolute variants; var is sqrt(var_pop) (np.var ddof=0)
-    (reference marineHeatWaves.py:370-392; common/core.py:89-127)."""
-    m = event_metrics(
-        _flagged(spark, sf_dir),
-        _events(spark, sf_dir),
-        with_rates=False,
-        with_categories=False,
-    )
+    """A5+W6, read off the run partials: duration/max/mean/var/cumulative
+    for rel-seas, rel-thresh and absolute variants, each event merging
+    its member runs' partials; var is the population standard deviation
+    (np.var ddof=0) (reference marineHeatWaves.py:370-392;
+    common/core.py:89-127)."""
+    m = _metrics(_flagged(spark, sf_dir))
     sel = ["cell_id", "event_id", "date_start", "date_end", "duration", "date_peak"]
     out = m.select(
         *sel,
@@ -334,12 +337,7 @@ def q_onset_decline_rates(spark, sf_dir):
     branch yields 0/0 -> NaN unless the event spans the whole series; this
     engine returns 0.0 for every peak-at-edge case (the symmetric onset
     convention)."""
-    m = event_metrics(
-        _flagged(spark, sf_dir),
-        _events(spark, sf_dir),
-        with_rates=True,
-        with_categories=False,
-    )
+    m = _metrics(_flagged(spark, sf_dir), with_rates=True)
     return m.select(
         "cell_id",
         "event_id",
@@ -375,12 +373,7 @@ def q_event_categories(spark, sf_dir):
     *normalized-exceedance* peak (separate argmax from the rel-seas
     peak); duration_<cat> counts member days in each band
     (reference marineHeatWaves.py:384-392)."""
-    m = event_metrics(
-        _flagged(spark, sf_dir),
-        _events(spark, sf_dir),
-        with_rates=False,
-        with_categories=True,
-    )
+    m = _metrics(_flagged(spark, sf_dir), with_categories=True)
     return m.select(
         "cell_id",
         "event_id",
@@ -437,9 +430,7 @@ def q_block_average(spark, sf_dir):
     spine from the series span, empty blocks keep NULL stats
     (reference `blockAverage` marineHeatWaves.py:431-684)."""
     fl = _flagged(spark, sf_dir)
-    m = event_metrics(
-        fl, _events(spark, sf_dir), with_rates=False, with_categories=False
-    )
+    m = _metrics(fl)
     blk = block_average(m, fl, block_length=2)
     return blk.select(
         "cell_id",
@@ -590,8 +581,7 @@ def q_block_remove_missing(spark, sf_dir):
         F.avg("temp").alias("seas"),
     )
     fl = exceedance(od.join(F.broadcast(thr_t), ["cell_id"]))
-    ev = detect_events(fl, min_duration=MIN_DUR, max_gap=MAX_GAP)
-    m = event_metrics(fl, ev, with_rates=False, with_categories=False)
+    m = _metrics(fl)
     blk = block_average(m, od, block_length=2, remove_missing=True)
     return blk.select(
         "cell_id",
@@ -623,12 +613,7 @@ def q_event_rank_return(spark, sf_dir):
     """W9: distinct ordinal ranks (double-argsort = row_number), ties
     broken by (cell_id, event_id) for determinism; returnPeriod =
     (nYears+1)/rank (reference `rank` marineHeatWaves.py:785-855)."""
-    m = event_metrics(
-        _flagged(spark, sf_dir),
-        _events(spark, sf_dir),
-        with_rates=False,
-        with_categories=False,
-    )
+    m = _metrics(_flagged(spark, sf_dir))
     ranked = rank_return_periods(m, ["intensity_max"], n_years=N_YEARS)
     return ranked.select(
         "cell_id",
@@ -682,8 +667,7 @@ def q_cold_spells_simple(spark, sf_dir):
     fl = od.join(F.broadcast(thr_n), ["cell_id"]).withColumn(
         "exceed", F.coalesce(F.col("temp") > F.col("thresh"), F.lit(False))
     )
-    ev = detect_events(fl, min_duration=MIN_DUR, max_gap=MAX_GAP)
-    m = event_metrics(fl, ev, with_rates=False, with_categories=False)
+    m = _metrics(fl)
     return m.select(
         "cell_id",
         "event_id",

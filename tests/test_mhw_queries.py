@@ -14,3 +14,19 @@ def test_forecast_skill_bounds_and_coverage(spark, sf_dir):
         assert r["skill"] == pytest.approx(
             1.0 - r["mae_clim"] / r["mae_persist"], abs=1e-3
         )
+
+
+def test_official_record_covers_every_detection_row():
+    # the driver's CORRECTNESS artifact records the first 50 registry
+    # rows; every detection-chain row (incl. the full pipelines) must be
+    # among them so the official check covers the paper's queries
+    from mhw3d_detection_spark import queries as Q
+    from mhw3d_detection_spark.queries import detection
+
+    rows = [
+        name
+        for name, qd in Q.REGISTRY.items()
+        if qd.spark_fn.__module__ == detection.__name__
+    ]
+    assert rows
+    assert set(rows) <= set(list(Q.REGISTRY)[:50])

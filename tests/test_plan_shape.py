@@ -749,6 +749,23 @@ def test_flagged_chain_single_scan(spark, sf_dir):
     assert _count_exchanges(plan) <= 2, plan
 
 
+
+def test_component_metrics_read_off_run_partials(spark, sf_dir):
+    # the per-event component rows read their metrics off the run
+    # partials (fused_detect_metrics), like the pipeline: no member-day
+    # explode, no broadcast join of member days back to the series, and
+    # the series source is scanned once.
+    from mhw3d_detection_spark.queries.detection import (
+        q_event_metrics,
+        q_onset_decline_rates,
+    )
+
+    for q in (q_event_metrics, q_onset_decline_rates):
+        plan = _executed(q(spark, sf_dir))
+        assert "Generate" not in plan, plan
+        assert "BroadcastHashJoin" not in plan, plan
+        assert plan.count("Scan parquet") == 1, plan
+
 def test_minhash_bucket_join_skew_splittable(spark, sf_dir):
     # r14 (VERDICT r13 Next #1): the LSH bucket self-join must stay
     # AQE-skew-splittable — a sort-merge join over EnsureRequirements
