@@ -26,13 +26,17 @@ iterative gap-merge loop:
        mergeable metric partials, and one ``groupBy(cell, event)``
        merges an event's member runs. Every per-event metric, in the
        pipeline and in the component queries alike, is a readout of
-       these run partials.
+       these run partials. State that spans runs — the common moment
+       center, the rate formulas' neighbor values, the series extent —
+       is derived on the runs table (:func:`_recenter`,
+       :func:`_run_boundaries`), once for the whole-series tail and the
+       incremental merge alike; the series itself carries only the W3
+       window.
 
 Shuffle budget of the production flow: ONE hash exchange of the series
 on ``cell_id`` (the W3 window). The (cell, run) partial aggregate, the
-W5 window over each cell's runs (ordered by run id) and the
-(cell, event) merge all reuse that partitioning — no further exchange,
-no persist, no broadcast. All operators are stock DataFrame ops, so
+windows over each cell's runs and the (cell, event) merge all reuse
+that partitioning — no further exchange, no persist, no broadcast. All operators are stock DataFrame ops, so
 Catalyst/AQE handle skew, partial aggregation and partition coalescing.
 """
 
@@ -82,28 +86,23 @@ def enrich_series(
 ) -> DataFrame:
     """Fuse every per-cell sequential derivation the detection chain
     needs into ONE window pass (one exchange + one sort of the big
-    table): anomaly projections, RLE run ids (W3), boundary neighbors
-    for the rate formulas (W7), and the series extent — replacing three
-    separate exchange+sort subtrees, the dominant cost at scale.
+    table): anomaly projections and RLE run ids (W3). Everything that
+    spans runs — rate-formula neighbors, series extent, moment centers —
+    is derived afterwards on the runs table (:func:`_run_boundaries`,
+    :func:`_recenter`), so the series carries exactly one ordered
+    window.
     """
     w = Window.partitionBy(cell_col).orderBy(time_col)
-    wall = Window.partitionBy(cell_col)
-
     flag = F.coalesce(F.col(flag_col), F.lit(False))
-    rel_seas = F.col(temp_col) - F.col(seas_col)
 
     # single batched projection: one analysis pass, one Window node
     return ts_sev.withColumns(
         {
-            "rel_seas": rel_seas,
+            "rel_seas": F.col(temp_col) - F.col(seas_col),
             "rel_thresh": F.col(temp_col) - F.col(thresh_col),
             "rel_thresh_norm": (F.col(temp_col) - F.col(thresh_col))
             / (F.col(thresh_col) - F.col(seas_col)),
             "t_abs": F.col(temp_col),
-            "prev_rel_seas": F.lag(rel_seas).over(w),
-            "next_rel_seas": F.lead(rel_seas).over(w),
-            "series_start": F.min(time_col).over(wall),
-            "series_end": F.max(time_col).over(wall),
             "__flag": flag,
             "__run": _run_ids(flag, w).cast("long"),
         }
@@ -116,10 +115,13 @@ def _run_ids(flag: Column, w: WindowSpec) -> Column:
     no previous row), and the running count of change points as the id
     (reference RLE kernel common/core.py:53-69). The one RLE expression
     behind :func:`rle_runs`, :func:`enrich_series` and the cross-batch
-    run coalescing of :func:`merge_detect_partials`."""
-    lagged = F.lag(flag).over(w)
-    changed = F.when(lagged.isNull() | (flag != lagged), 1).otherwise(0)
-    return F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    run coalescing of :func:`merge_detect_partials`. ``lag`` appears
+    once: a missing previous row makes the comparison NULL, which the
+    ``coalesce`` counts as a change."""
+    changed = F.coalesce(flag != F.lag(flag).over(w), F.lit(True))
+    return F.sum(changed.cast("int")).over(
+        w.rowsBetween(Window.unboundedPreceding, 0)
+    )
 
 
 def rle_runs(
@@ -172,7 +174,8 @@ def detect_events(
     event_id, date_start, date_end, duration) — the event table the
     ``q_gap_join_events`` family and the streaming parity tests read.
     Events that need metrics come from :func:`fused_detect_metrics`,
-    which shares the same gap assembly (:func:`_assemble_events`).
+    which shares the same gap assembly (:func:`_event_members`,
+    :func:`_events`).
 
     Implements W3 (RLE), W4 (min-duration HAVING) and W5 (gap joining)
     from SURVEY.md §2.6; semantics match marineHeatWaves.py:319-345 and
@@ -188,29 +191,29 @@ def detect_events(
         min_duration=min_duration,
     ).withColumnRenamed("run_id", "__run")
 
-    return _assemble_events(
+    members = _event_members(
         runs,
         cell_col=cell_col,
         qualifies=F.lit(True),
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
     )
+    return _events(members, cell_col=cell_col)
 
 
-def _assemble_events(
+def _event_members(
     runs: DataFrame,
     *,
     cell_col: str = "cell_id",
     qualifies: Column,
     max_gap: int,
     join_across_gaps: bool,
-    aggs: tuple[Column, ...] = (),
 ) -> DataFrame:
-    """W5 gap joining + event assembly: ONE ordered pass over each
-    cell's runs (``__run`` increasing in time), then one
-    ``groupBy(cell, event)`` with the extra per-event ``aggs``. Shared
-    by :func:`detect_events` and :func:`fused_detect_metrics` so the gap
-    semantics cannot drift between the event table and the metrics.
+    """W5 gap joining: ONE ordered pass over each cell's runs (``__run``
+    increasing in time) keeps every member run of an event, tagged with
+    its event id ``__evt``. Shared by :func:`detect_events` and
+    :func:`fused_detect_metrics` so the gap semantics cannot drift
+    between the event table and the metrics.
 
     A ``qualifies`` run opens a new event unless the gap since the last
     qualifying run's end is <= ``max_gap`` (always opens without
@@ -227,8 +230,9 @@ def _assemble_events(
         last_end = F.last(F.when(qualifies, F.col("run_end")), ignorenulls=True).over(
             w.rowsBetween(Window.unboundedPreceding, -1)
         )
-        new = new & (
-            last_end.isNull() | (F.datediff("run_start", last_end) - 1 > max_gap)
+        # no earlier qualifying run: NULL gap -> opens
+        new = new & F.coalesce(
+            F.datediff("run_start", last_end) - 1 > max_gap, F.lit(True)
         )
     runs = runs.withColumns({"__q": qualifies, "__new": new.cast("int")})
     evt = F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -236,15 +240,21 @@ def _assemble_events(
         w.rowsBetween(1, Window.unboundedFollowing)
     )
     member = F.col("__q") | (next_new == 0)
-    g = (
-        runs.withColumn("__evt", F.when(member, evt))
-        .filter(F.col("__evt").isNotNull())
-        .groupBy(cell_col, "__evt")
-        .agg(
-            F.min("run_start").alias("date_start"),
-            F.max("run_end").alias("date_end"),
-            *aggs,
-        )
+    return runs.withColumn("__evt", F.when(member, evt)).filter(
+        F.col("__evt").isNotNull()
+    )
+
+
+def _events(
+    members: DataFrame, *, cell_col: str = "cell_id", aggs: tuple[Column, ...] = ()
+) -> DataFrame:
+    """Event assembly: one ``groupBy(cell, event)`` over the
+    :func:`_event_members` runs, with the extra per-event ``aggs``; on
+    input hash-partitioned by cell it needs no exchange."""
+    g = members.groupBy(cell_col, "__evt").agg(
+        F.min("run_start").alias("date_start"),
+        F.max("run_end").alias("date_end"),
+        *aggs,
     )
     return g.select(
         cell_col,
@@ -277,9 +287,9 @@ def fused_detect_metrics(
     *mergeable partials* for every metric — sums / counts /
     sums-of-squares for the mean/var family,
     argmax structs (value, earliest-day tie-break) for the peaks,
-    category-band day counts, boundary values for the rate formulas —
-    and everything downstream (min-duration filter, gap joining, the
-    metric merge) happens on the tiny runs table.
+    category-band day counts, run-edge values for the rate formulas —
+    and everything downstream (cross-run state, min-duration filter,
+    gap joining, the metric merge) happens on the tiny runs table.
 
     Gap-day semantics are preserved exactly: runs partition the
     per-cell timeline, and a joined event [date_start, date_end] spans
@@ -288,24 +298,27 @@ def fused_detect_metrics(
     days the reference also aggregates over
     (marineHeatWaves.py:350-411 slices tt_start:tt_end+1) — are exactly
     its qualifying runs plus every run between two of them
-    (:func:`_assemble_events`). Runs before the first / after the last
+    (:func:`_event_members`). Runs before the first / after the last
     qualifying run, or inside a gap that splits two events, belong to
     no event.
 
     Variance uses the closed form sqrt(E[x^2] - E[x]^2) over merged
-    partials (population, like np.var ddof=0) — computed on values
-    CENTERED by a per-cell constant (the cell's first value of each
-    metric) so the squares are of anomaly-sized deviations, not of
-    |x| ~ 1e5 absolutes: without the shift, q/n - (s/n)^2 loses ~6
-    significant digits at the repo's own TPC-H-derived temp magnitudes
-    (catastrophic cancellation). Shifting by a constant leaves the
-    variance unchanged, and mean/cumulative are recovered by adding
-    the center back. Clamped at 0 against residual rounding.
+    partials (population, like np.var ddof=0) — computed on moments
+    CENTERED on one constant per event (:func:`_recenter`: the mean of
+    the event's earliest run with a value) so the squares are of
+    anomaly-sized deviations, not of |x| ~ 1e5 absolutes: without the
+    shift, q/n - (s/n)^2 loses ~6 significant digits at the repo's own
+    TPC-H-derived temp magnitudes (catastrophic cancellation). Shifting
+    by a constant leaves the variance unchanged, and mean/cumulative
+    are recovered by adding the center back. Clamped at 0 against
+    residual rounding. The cross-run state the rates need (neighbor
+    values, series extent) comes from the same runs-level helper the
+    incremental merge uses (:func:`_run_boundaries`).
 
     Scale shape: hashpartitioning(cell) from the enrich window
-    satisfies the (cell, run) aggregate, the ordered window over each
-    cell's runs and the (cell, event) merge, so the whole tail after
-    the enrich exchange is ONE stage: no exchange, no persist, no
+    satisfies the (cell, run) aggregate, the windows over each cell's
+    runs and the (cell, event) merge, so the whole tail after the
+    enrich exchange is ONE stage: no exchange, no persist, no
     broadcast join. The runs table (O(flag transitions) per cell) is
     never cached — a cached plan skips AQE partition coalescing, so it
     and every re-scan would run at the full initial partition count.
@@ -318,7 +331,7 @@ def fused_detect_metrics(
         with_categories=with_categories,
     )
     return _metrics_from_partials(
-        p,
+        _run_boundaries(p, with_rates=with_rates),
         cell_col=cell_col,
         min_duration=min_duration,
         max_gap=max_gap,
@@ -326,6 +339,9 @@ def fused_detect_metrics(
         with_rates=with_rates,
         with_categories=with_categories,
     )
+
+
+_MOMENTS = ("rs", "rt", "ab")  # rel_seas, rel_thresh, t_abs
 
 
 def _run_partials(
@@ -337,37 +353,24 @@ def _run_partials(
     with_categories: bool = True,
 ) -> DataFrame:
     """The per-(cell, run) mergeable-partial aggregate behind
-    :func:`fused_detect_metrics` — ONE pass over the enriched series
-    producing, per run, everything any per-event metric needs:
-    centered moment sums, argmax peak structs, category-day counters,
-    and (with_rates) run-boundary values + series extents. The output
-    rows are associative state: same-flag time-adjacent runs merge by
-    summing/maxing partials (see :func:`merge_detect_partials`)."""
+    :func:`fused_detect_metrics` and :func:`detect_partials` — ONE
+    grouped pass over the enriched series producing, per run,
+    everything any per-event metric needs: moment partials, argmax peak
+    structs, category-day counters and (with_rates) the run's first and
+    last rel_seas. The output rows are associative state: same-flag
+    time-adjacent runs merge by summing/maxing partials (see
+    :func:`merge_detect_partials`).
+
+    Moment partials ``(n, s, q, c)``: count, sum and sum of squares of
+    deviations from the center ``c``. Each run centers on its own mean
+    (``s`` = 0, ``q`` = var_pop * count), so the series needs no
+    centering window; :func:`_recenter` gives runs a common center."""
     day = F.to_date(time_col)
     tb = -F.unix_date(day)  # earliest-day tie-break under max()
-    # per-cell centering constants for the moment partials: first
-    # non-null value of each metric, over the same (cell, time) ordered
-    # frame the enrich window already sorts — one shared sort, full
-    # frame, deterministic
-    wc = (
-        Window.partitionBy(cell_col)
-        .orderBy(time_col)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    enriched = enriched.withColumns(
-        {
-            "__c_rs": F.first("rel_seas", ignorenulls=True).over(wc),
-            "__c_rt": F.first("rel_thresh", ignorenulls=True).over(wc),
-            "__c_ab": F.first("t_abs", ignorenulls=True).over(wc),
-        }
-    )
     rs = F.col("rel_seas")
     rt = F.col("rel_thresh")
     rtn = F.col("rel_thresh_norm")
     ab = F.col("t_abs")
-    crs = F.col("__c_rs")
-    crt = F.col("__c_rt")
-    cab = F.col("__c_ab")
     cat_band = F.floor(F.lit(1.0) + rtn)
 
     aggs = [
@@ -375,20 +378,17 @@ def _run_partials(
         F.min(time_col).alias("run_start"),
         F.max(time_col).alias("run_end"),
         F.count(F.lit(1)).alias("run_days"),
-        # centered mean/var/cumulative partials (nulls skipped, like
-        # avg/var_pop); the center constants ride along per run
-        F.count(rs).alias("n_rs"),
-        F.sum(rs - crs).alias("s_rs"),
-        F.sum((rs - crs) * (rs - crs)).alias("q_rs"),
-        F.first("__c_rs").alias("c_rs"),
-        F.count(rt).alias("n_rt"),
-        F.sum(rt - crt).alias("s_rt"),
-        F.sum((rt - crt) * (rt - crt)).alias("q_rt"),
-        F.first("__c_rt").alias("c_rt"),
-        F.count(ab).alias("n_ab"),
-        F.sum(ab - cab).alias("s_ab"),
-        F.sum((ab - cab) * (ab - cab)).alias("q_ab"),
-        F.first("__c_ab").alias("c_ab"),
+    ]
+    # moment partials about the run's own mean (nulls skipped, like
+    # avg/var_pop; an all-null run has c = q = NULL, n = 0)
+    for m, x in zip(_MOMENTS, (rs, rt, ab)):
+        aggs += [
+            F.count(x).alias(f"n_{m}"),
+            F.lit(0.0).alias(f"s_{m}"),
+            (F.var_pop(x) * F.count(x)).alias(f"q_{m}"),
+            F.avg(x).alias(f"c_{m}"),
+        ]
+    aggs += [
         # W6 peak partials: ordering key + payload at the key's argmax
         F.max(F.struct(rs.alias("v"), tb.alias("tb"))).alias("pk_key"),
         F.max_by(
@@ -413,14 +413,71 @@ def _run_partials(
         aggs += [
             F.min_by(rs, F.col(time_col)).alias("first_rs"),
             F.max_by(rs, F.col(time_col)).alias("last_rs"),
-            F.min_by("prev_rel_seas", F.col(time_col)).alias("before_rs"),
-            F.max_by("next_rel_seas", F.col(time_col)).alias("after_rs"),
-            F.first("series_start").alias("series_start"),
-            F.first("series_end").alias("series_end"),
         ]
     return enriched.groupBy(
         F.col(cell_col).alias("cell_id"), F.col("__run").alias("__run")
     ).agg(*aggs)
+
+
+def _recenter(runs: DataFrame, group: str) -> DataFrame:
+    """Move the moment partials ``(n, s, q, c)`` of the runs that will
+    be summed together — one ``(cell_id, group)`` — onto one center
+    ``C``, the center of the group's earliest run with a non-null one
+    (an all-NULL run's ``c`` would NULL every shifted sum), by the shift
+    identity ``d = c - C``: ``sum(x - C) = s + n*d``,
+    ``sum((x - C)^2) = q + 2*d*s + n*d^2``. Any input centering merges,
+    including older stores' per-cell first value (``s`` != 0). A
+    group-local center keeps ``d`` to the spread inside the group, so
+    the closed-form variance cancels no more digits than the data's own
+    spread; a cell-wide center would cost ~eps * (event - center)^2 and
+    turn an exact zero variance into ~1e-8 after the square root.
+    Groups: events (both tails) and the pieces of one run that batch
+    boundaries cut (the merge's run coalescing)."""
+    wall = Window.partitionBy("cell_id", group)
+    centered = runs.withColumns(
+        {
+            f"__C_{m}": F.min_by(
+                f"c_{m}",
+                F.when(F.col(f"c_{m}").isNotNull(), F.col("run_start")),
+            ).over(wall)
+            for m in _MOMENTS
+        }
+    )
+    shifted = {}
+    for m in _MOMENTS:
+        n, s, q = F.col(f"n_{m}"), F.col(f"s_{m}"), F.col(f"q_{m}")
+        d = F.col(f"c_{m}") - F.col(f"__C_{m}")
+        shifted.update(
+            {
+                f"s_{m}": s + n * d,
+                f"q_{m}": q + 2 * d * s + n * d * d,
+                f"c_{m}": F.col(f"__C_{m}"),
+            }
+        )
+    # one projection replaces the partials and drops the centers
+    return centered.select(
+        *(shifted[c].alias(c) if c in shifted else c for c in runs.columns)
+    )
+
+
+def _run_boundaries(runs: DataFrame, *, with_rates: bool) -> DataFrame:
+    """The W7 rate formulas' cross-run state on the runs table (``__run``
+    increasing in time): a run's previous day IS the previous run's last
+    day, so ``before_rs`` = lag of ``last_rs``, ``after_rs`` = lead of
+    ``first_rs`` (NULL at the series edges), and the series extent is
+    min/max over the cell's runs. Shared by both tails."""
+    if not with_rates:
+        return runs
+    w = Window.partitionBy("cell_id").orderBy("__run")
+    wall = Window.partitionBy("cell_id")
+    return runs.withColumns(
+        {
+            "before_rs": F.lag("last_rs").over(w),
+            "after_rs": F.lead("first_rs").over(w),
+            "series_start": F.min("run_start").over(wall),
+            "series_end": F.max("run_end").over(wall),
+        }
+    )
 
 
 def _metrics_from_partials(
@@ -436,8 +493,8 @@ def _metrics_from_partials(
     """Event assembly + metric merge over a run-partials table
     (:func:`_run_partials` output, normalized to a ``cell_id`` column):
     W4 min-duration filter, W5 gap joining and the per-event merge of
-    every member run's partials, all in the one ordered pass of
-    :func:`_assemble_events`, then the category/rate tail."""
+    every member run's partials (moments re-centered per event,
+    :func:`_recenter`), then the category/rate tail."""
 
     def merged_std(n, s, q2):
         n, s, q2 = F.sum(n), F.sum(s), F.sum(q2)
@@ -491,39 +548,32 @@ def _metrics_from_partials(
             ).alias("__ends_at_series_end"),
         ]
 
-    g = _assemble_events(
+    members = _event_members(
         p,
         qualifies=F.col("flag") & (F.col("run_days") >= min_duration),
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
-        aggs=tuple(m_aggs),
     )
+    g = _events(_recenter(members, "__evt"), aggs=tuple(m_aggs))
 
-    out = g.select(
-        "*",
-        F.col("__pk_key.v").alias("intensity_max"),
-        F.col("__pk_val.date_peak").alias("date_peak"),
-        F.col("__pk_val.rt").alias("intensity_max_relThresh"),
-        F.col("__pk_val.ab").alias("intensity_max_abs"),
-        F.datediff(F.col("__pk_val.date_peak"), F.to_date("date_start")).alias(
-            "__tt_peak"
-        ),
-    ).drop("__pk_key", "__pk_val")
-
+    imax = F.col("__pk_key.v")
+    tt = F.datediff(F.col("__pk_val.date_peak"), F.to_date("date_start"))
+    readout = {
+        "intensity_max": imax,
+        "date_peak": F.col("__pk_val.date_peak"),
+        "intensity_max_relThresh": F.col("__pk_val.rt"),
+        "intensity_max_abs": F.col("__pk_val.ab"),
+    }
     # S6 category readout + W7 onset/decline rate formulas
     # (marineHeatWaves.py:385-411: half-day boundary convention, 4 edge
     # cases at the series extremes)
     if with_categories:
-        out = out.withColumn(
-            "category",
-            F.element_at(
-                F.array(*[F.lit(c) for c in CATEGORIES]),
-                F.least(F.col("__pkc_val"), F.lit(4)).cast("int"),
-            ),
-        ).drop("__pkc_val")
+        readout["category"] = F.element_at(
+            F.array(*[F.lit(c) for c in CATEGORIES]),
+            F.least(F.col("__pkc_val"), F.lit(4)).cast("int"),
+        )
     if with_rates:
-        tt_peak = F.col("__tt_peak").cast("double")
-        imax = F.col("intensity_max")
+        tt_peak = tt.cast("double")
         dur = F.col("duration").cast("double")
         onset = (
             F.when(
@@ -531,7 +581,7 @@ def _metrics_from_partials(
                 (imax - 0.5 * (F.col("__first_rel_seas") + F.col("__before_rel_seas")))
                 / (tt_peak + 0.5),
             )
-            .when(F.col("__tt_peak") == 0, F.lit(0.0))  # peak==first -> 0
+            .when(tt == 0, F.lit(0.0))  # peak==first -> 0
             .otherwise((imax - F.col("__first_rel_seas")) / tt_peak)
         )
         decline_days = dur - 1 - tt_peak
@@ -541,18 +591,19 @@ def _metrics_from_partials(
                 (imax - 0.5 * (F.col("__last_rel_seas") + F.col("__after_rel_seas")))
                 / (decline_days + 0.5),
             )
-            .when(F.col("__tt_peak") == F.col("duration") - 1, F.lit(0.0))
+            .when(tt == F.col("duration") - 1, F.lit(0.0))
             .otherwise((imax - F.col("__last_rel_seas")) / decline_days)
         )
-        out = out.withColumns({"rate_onset": onset, "rate_decline": decline}).drop(
-            "__first_rel_seas",
-            "__last_rel_seas",
-            "__before_rel_seas",
-            "__after_rel_seas",
-            "__starts_at_series_start",
-            "__ends_at_series_end",
-        )
-    return out.drop("__tt_peak").withColumnRenamed("cell_id", cell_col)
+        readout.update({"rate_onset": onset, "rate_decline": decline})
+    # one projection: event columns, the readouts, no internal columns
+    return g.select(
+        *(
+            F.col(c).alias(cell_col) if c == "cell_id" else c
+            for c in g.columns
+            if not c.startswith("__")
+        ),
+        *(v.alias(k) for k, v in readout.items()),
+    )
 
 
 def detect_partials(
@@ -572,9 +623,9 @@ def detect_partials(
     ``clim_partials`` for chunked / backfill processing (the
     reference's chunk-at-a-time dask model, reprocessed relationally).
 
-    Each output row is one exceedance run of the batch carrying
-    associative state: centered moment sums, argmax peak structs,
-    category-day counters, boundary values. Feed the union of all
+    Each output row is one run (exceeding or not) of the batch carrying
+    associative state (:func:`_run_partials`); cross-run state, which
+    a batch cannot see, is derived by the merge. Feed the union of all
     batches' partials to :func:`merge_detect_partials`; the result
     equals the whole-series :func:`fused_detect_metrics` output up to
     floating-point reassociation in the re-centered moments (~1e-12
@@ -621,97 +672,41 @@ def merge_detect_partials(
     """Incremental detection, reduce side: union of per-batch
     :func:`detect_partials` rows -> the whole-series event metrics.
 
-    Three runs-sized steps (the series itself never reappears):
+    Runs-sized steps (the series itself never reappears):
 
     1. Coalesce runs across batch boundaries: order each cell's runs by
        run_start and merge consecutive SAME-FLAG runs (the whole-series
        RLE is row-based, so a flag run cut by a batch boundary — even
-       across a calendar gap in the data — is one run). Moments are
-       re-centered to the cell's earliest batch center first
-       (shift identity: sum((x-C)) = s + n*(c_i - C),
-       sum((x-C)^2) = q + 2*(c_i - C)*s + n*(c_i - C)^2).
-    2. Recompute the cross-run boundary state the batches could not
-       see: before/after = the neighboring run's edge value (a run's
-       previous row IS the previous run's last row), series extents =
-       min/max over the cell's runs.
-    3. Renumber runs (alternating flags -> consecutive ids) and run the
+       across a calendar gap in the data — is one run), their moments
+       first re-centered on one center (:func:`_recenter`, which the
+       event merge shares). The coalesced group id increases in time,
+       so it is the merged run's ``__run``.
+    2. Derive the cross-run state the batches could not see
+       (:func:`_run_boundaries`, shared with the fused tail) and run the
        standard event assembly + metric merge
        (:func:`_metrics_from_partials`).
 
-    All three steps key on the cell, so the union's one exchange on
-    ``cell_id`` serves every window and aggregate after it; nothing is
-    persisted.
+    Extra batch columns (older stores' batch-local boundary columns, a
+    store's ``batch`` partition) drop out at the coalescing aggregate.
+    Every step keys on the cell, so the union's one exchange on
+    ``cell_id`` serves every window and aggregate; nothing is persisted.
     """
     w = Window.partitionBy("cell_id").orderBy("run_start")
-    wall = Window.partitionBy("cell_id")
-
-    # canonical per-cell centers: the earliest run WITH a non-null
-    # center (min_by skips rows whose ordering key is NULL). A batch
-    # whose slice has no non-null value for a metric (e.g. seas NULL
-    # throughout, so rel_seas is NULL) carries c_* = NULL; taking the
-    # plain earliest run's center would then NULL the re-centering
-    # delta for EVERY batch and wipe the moment sums — the
-    # whole-series fused path centers on the first non-null value, and
-    # batches partition the time axis, so the earliest non-null batch
-    # center IS that value.
-    def first_center(c: str) -> Column:
-        return F.min_by(
-            c, F.when(F.col(c).isNotNull(), F.col("run_start"))
-        ).over(wall)
-
-    cent = partials.withColumns(
-        {
-            "__C_rs": first_center("c_rs"),
-            "__C_rt": first_center("c_rt"),
-            "__C_ab": first_center("c_ab"),
-        }
-    )
-
-    def recenter(s, q, n, c, C):
-        d = F.col(c) - F.col(C)
-        s2 = (F.col(s) + F.col(n) * d).alias(s)
-        q2 = (
-            F.col(q) + 2 * d * F.col(s) + F.col(n) * d * d
-        ).alias(q)
-        return s2, q2
-
-    s_rs, q_rs = recenter("s_rs", "q_rs", "n_rs", "c_rs", "__C_rs")
-    s_rt, q_rt = recenter("s_rt", "q_rt", "n_rt", "c_rt", "__C_rt")
-    s_ab, q_ab = recenter("s_ab", "q_ab", "n_ab", "c_ab", "__C_ab")
-    keep = [
-        c
-        for c in partials.columns
-        if c
-        not in {
-            "__run",
-            "s_rs", "q_rs", "c_rs",
-            "s_rt", "q_rt", "c_rt",
-            "s_ab", "q_ab", "c_ab",
-            # batch-local boundary state — recomputed below
-            "before_rs", "after_rs", "series_start", "series_end",
-        }
-    ]
-    cent = cent.select(
-        *keep,
-        s_rs, q_rs, F.col("__C_rs").alias("c_rs"),
-        s_rt, q_rt, F.col("__C_rt").alias("c_rt"),
-        s_ab, q_ab, F.col("__C_ab").alias("c_ab"),
-    )
-
-    # 1. coalesce same-flag consecutive runs (gaps-and-islands over the
-    # runs themselves)
-    g = cent.withColumn("__g", _run_ids(F.col("flag"), w))
+    g = _recenter(partials.withColumn("__g", _run_ids(F.col("flag"), w)), "__g")
     merge_aggs = [
         F.first("flag").alias("flag"),
         F.min("run_start").alias("run_start"),
         F.max("run_end").alias("run_end"),
         F.sum("run_days").alias("run_days"),
-        F.sum("n_rs").alias("n_rs"), F.sum("s_rs").alias("s_rs"),
-        F.sum("q_rs").alias("q_rs"), F.first("c_rs").alias("c_rs"),
-        F.sum("n_rt").alias("n_rt"), F.sum("s_rt").alias("s_rt"),
-        F.sum("q_rt").alias("q_rt"), F.first("c_rt").alias("c_rt"),
-        F.sum("n_ab").alias("n_ab"), F.sum("s_ab").alias("s_ab"),
-        F.sum("q_ab").alias("q_ab"), F.first("c_ab").alias("c_ab"),
+    ]
+    for m in _MOMENTS:
+        merge_aggs += [
+            F.sum(f"n_{m}").alias(f"n_{m}"),
+            F.sum(f"s_{m}").alias(f"s_{m}"),
+            F.sum(f"q_{m}").alias(f"q_{m}"),
+            F.first(f"c_{m}").alias(f"c_{m}"),
+        ]
+    merge_aggs += [
         F.max("pk_key").alias("pk_key"),
         F.max_by("pk_val", "pk_key").alias("pk_val"),
     ]
@@ -727,25 +722,9 @@ def merge_detect_partials(
             F.min_by("first_rs", "run_start").alias("first_rs"),
             F.max_by("last_rs", "run_end").alias("last_rs"),
         ]
-    runs = g.groupBy("cell_id", "__g").agg(*merge_aggs)
-
-    # 2. cross-run boundary state + 3. contiguous ids in time order
-    cols = {
-        "__run": F.row_number().over(w).cast("long"),
-    }
-    if with_rates:
-        cols.update(
-            {
-                "before_rs": F.lag("last_rs").over(w),
-                "after_rs": F.lead("first_rs").over(w),
-                "series_start": F.min("run_start").over(wall),
-                "series_end": F.max("run_end").over(wall),
-            }
-        )
-    runs = runs.withColumns(cols).drop("__g")
-
+    runs = g.groupBy("cell_id", F.col("__g").alias("__run")).agg(*merge_aggs)
     return _metrics_from_partials(
-        runs,
+        _run_boundaries(runs, with_rates=with_rates),
         cell_col=cell_col,
         min_duration=min_duration,
         max_gap=max_gap,

@@ -91,13 +91,14 @@ def detect_mhw(
         ts_s, clim, cell_col=cell_col, time_col=time_col, temp_col=temp_col
     )
     flagged = exceedance(sev, temp_col=temp_col)
-    # One fused window pass derives run ids + boundary neighbors +
-    # series extent (one exchange + one sort of the big table), and
-    # fused_detect_metrics consumes it in a SINGLE per-(cell, run)
-    # partial aggregate, then one ordered pass over each cell's runs
-    # and one (cell, event) merge — all on the window's cell
-    # partitioning, so nothing after it shuffles, persists or
-    # broadcasts (operators/detection.py fused_detect_metrics).
+    # One window pass derives the run ids (one exchange + one sort of
+    # the big table), and fused_detect_metrics consumes it in a SINGLE
+    # per-(cell, run) partial aggregate; the cross-run state (moment
+    # centers, rate neighbors, series extent), the ordered pass over
+    # each cell's runs and the (cell, event) merge all run on the runs
+    # table, on the window's cell partitioning, so nothing after it
+    # shuffles, persists or broadcasts (operators/detection.py
+    # fused_detect_metrics).
     enriched = enrich_series(
         flagged, cell_col=cell_col, time_col=time_col, temp_col=temp_col
     )

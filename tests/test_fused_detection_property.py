@@ -15,7 +15,11 @@ This pins the subtle equivalences the run-partials readout relies on:
 - rate-formula boundary values reassembled from run edges, including
   events touching the series start/end;
 - on the merge path, runs and events cut by batch boundaries re-join,
-  whatever the split and the batch arrival order.
+  whatever the split and the batch arrival order;
+- the merge does not depend on how a batch centered its moments: runs
+  re-expressed about another center, and batches in the per-cell
+  first-value centering of older partials stores, merge to the same
+  events.
 """
 
 import datetime as dt
@@ -142,4 +146,67 @@ def test_merged_partials_equal_loop_oracle(spark, temps_by_cell, kw, cuts):
     parts = batches[-1]
     for b in reversed(batches[:-1]):
         parts = parts.unionByName(b)
+    _assert_matches_oracle(merge_detect_partials(parts, **kw), temps_by_cell, kw)
+
+
+MOMENTS = {"rs": "rel_seas", "rt": "rel_thresh", "ab": "t_abs"}
+
+
+def _about(parts, centers):
+    """The same moment partials expressed about other centers (metric ->
+    Column): with d = C - c, sum(x - C) = s - n*d and
+    sum((x - C)^2) = q - 2*d*s + n*d^2."""
+    cols = {}
+    for m, C in centers.items():
+        n, s, q, c = (F.col(f"{k}_{m}") for k in "nsqc")
+        d = C - c
+        cols.update(
+            {f"c_{m}": C, f"s_{m}": s - n * d, f"q_{m}": q - 2 * d * s + n * d * d}
+        )
+    return parts.withColumns(cols)
+
+
+def _first_value_store(batch):
+    """A batch as older partials stores hold it: moments about each
+    cell's first non-null value in the batch (s != 0), plus batch-local
+    boundary columns — NULL neighbors and the batch's own extent — that
+    the merge must not read."""
+    firsts = enrich_series(exceedance(batch)).groupBy("cell_id").agg(
+        *[
+            F.min_by(x, F.when(F.col(x).isNotNull(), F.col("time"))).alias(m)
+            for m, x in MOMENTS.items()
+        ],
+        F.min("time").alias("series_start"),
+        F.max("time").alias("series_end"),
+    )
+    parts = detect_partials(batch).join(
+        firsts.withColumnsRenamed({m: f"__f_{m}" for m in MOMENTS}), "cell_id"
+    )
+    return _about(parts, {m: F.col(f"__f_{m}") for m in MOMENTS}).withColumns(
+        {
+            "before_rs": F.lit(None).cast("double"),
+            "after_rs": F.lit(None).cast("double"),
+        }
+    ).drop(*(f"__f_{m}" for m in MOMENTS))
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    temps_by_cell=cells_strategy,
+    kw=detection_kw,
+    cuts=st.lists(st.integers(1, 57), min_size=2, max_size=2, unique=True),
+    delta=st.integers(-40, 40).map(lambda k: k / 4.0),
+)
+def test_merge_is_center_invariant(spark, temps_by_cell, kw, cuts, delta):
+    df = _frame(spark, temps_by_cell)
+    lo, hi = (F.lit(_day(c)) for c in sorted(cuts))
+    t = F.col("time")
+    shifted = detect_partials(df.filter((t >= lo) & (t < hi)))
+    parts = (
+        detect_partials(df.filter(t >= hi))
+        .unionByName(
+            _about(shifted, {m: F.col(f"c_{m}") + delta for m in MOMENTS})
+        )
+        .unionByName(_first_value_store(df.filter(t < lo)), allowMissingColumns=True)
+    )
     _assert_matches_oracle(merge_detect_partials(parts, **kw), temps_by_cell, kw)

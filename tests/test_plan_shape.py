@@ -175,8 +175,45 @@ def test_fused_detection_full_plan_one_stage_tail(spark, sf_dir):
     assert _count_exchanges(plan) <= 2, plan
 
 
-def test_merge_detect_partials_not_cached(spark, sf_dir):
-    # the incremental merge shares the same tail: no cached run table
+def test_fused_detection_one_series_window(spark, sf_dir):
+    # Cross-run state (moment centers, rate neighbors, series extent) is
+    # derived on the runs table, so the series carries only the RLE
+    # window: one lag(flag) and its running sum, both ordered by time.
+    # Window nodes under the (cell, __run) aggregate run over the series.
+    from mhw3d_detection_spark.operators.detection import (
+        enrich_series,
+        exceedance,
+        fused_detect_metrics,
+    )
+
+    ts = _prepartitioned_series(spark, sf_dir)
+    plan = _executed(fused_detect_metrics(enrich_series(exceedance(ts))))
+    lines = plan.splitlines()
+    run_agg = next(
+        i
+        for i, line in enumerate(lines)
+        if re.search(r"Aggregate\(key=\[cell_id#\d+L?, __run#\d+L?\]", line)
+    )
+    series_windows = [line for line in lines[run_agg:] if "Window [" in line]
+    assert series_windows, plan
+    # no partition-only (unordered) window over the series
+    for line in series_windows:
+        assert not re.search(r"\], \[cell_id#\d+L?\]\s*$", line), line
+    # no full-frame first/nth_value (centering constant) ordered by time
+    assert not re.search(
+        r"(first|nth_value)\([^)]*\) windowspecdefinition\(cell_id#\d+L?, "
+        r"time#\d+ ASC NULLS FIRST, specifiedwindowframe\(RowFrame, "
+        r"unboundedpreceding\$\(\), unboundedfollowing\$\(\)\)\)",
+        plan,
+    ), plan
+    # the RLE change point evaluates lag once
+    lags = re.findall(
+        r"lag\([^)]*\) windowspecdefinition\(cell_id#\d+L?, time#", plan
+    )
+    assert len(lags) == 1, plan
+
+
+def _merge_plan(spark, sf_dir) -> str:
     from mhw3d_detection_spark.operators.detection import (
         detect_partials,
         merge_detect_partials,
@@ -187,8 +224,20 @@ def test_merge_detect_partials_not_cached(spark, sf_dir):
     parts = detect_partials(ts.filter(F.col("time") < cut)).unionByName(
         detect_partials(ts.filter(F.col("time") >= cut))
     )
-    plan = _executed(merge_detect_partials(parts))
+    return _executed(merge_detect_partials(parts))
+
+
+def test_merge_detect_partials_not_cached(spark, sf_dir):
+    # the incremental merge shares the same tail: no cached run table
+    plan = _merge_plan(spark, sf_dir)
     assert "InMemoryTableScan" not in plan, plan
+
+
+def test_merge_detect_partials_no_renumbering(spark, sf_dir):
+    # the coalesced run-group id already increases in time, so the
+    # merge orders its runs by it directly: no row_number pass
+    plan = _merge_plan(spark, sf_dir)
+    assert "row_number" not in plan, plan
 
 
 def test_rank_return_periods_two_phase(spark, sf_dir):
