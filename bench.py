@@ -12,10 +12,14 @@ MinHash dedup (shingle explode + banded self-join), similarity top-k
 `baseline_equivalent` reports BOTH `pipeline_wall_cold_sec` (one run on
 a fresh JVM: input synthesis + Janino codegen + JIT included — strictly
 COLDER than the r1-r4 protocol, which persisted the input outside the
-wall and took best-of-5 with a warm codegen cache from run 2; compare
-cold-to-cold from r6 onward only) and `pipeline_wall_sec` (steady state
-from a cached input, best-of-5 — the reference notebook's warm-client
-conditions).
+wall and took best-of-5; compare cold-to-cold from r6 onward only) and
+`pipeline_wall_sec` (steady state from a cached input, best-of-5 — the
+reference notebook's warm-client conditions). Steady runs reuse the
+codegen cache only since `get_spark` sized it (1000 entries): Spark's
+default 100-entry cache holds fewer classes than one pipeline plan
+(`detect_mhw` with grid pooling compiles 98), so every earlier
+"warm" run recompiled about half of them (55 of 98 on the
+`perfbench/` grid).
 
 r8 protocol: every steady number is best-of-5 within one JVM reporting
 BOTH min (`queries` / `pipeline_wall_sec` — the round-over-round
@@ -173,9 +177,8 @@ def main() -> None:
     # one end-to-end run on a fresh session — input synthesis, Janino
     # codegen and JIT all included. NOTE: this is STRICTLY colder than
     # the r1-r4 protocol (which persisted+counted the input OUTSIDE the
-    # wall and took best-of-5, where runs 2-5 reuse the codegen cache),
-    # so compare cold-to-cold only from r6 onward — not against the
-    # r1-r4 column.
+    # wall and took best-of-5), so compare cold-to-cold only from r6
+    # onward — not against the r1-r4 column.
     # r13: decompose the cold wall so the artifact attributes it —
     # plan build (py4j construction + first Catalyst analysis) vs
     # first execution (Janino codegen + C2 JIT + the actual compute).

@@ -3,6 +3,8 @@ import os
 import pytest
 from pyspark.sql import SparkSession
 
+from mhw3d_detection_spark.session import STATIC_CONFS
+
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
 
@@ -17,6 +19,9 @@ def spark():
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
+        # the engine's codegen cache size: at Spark's default the suite
+        # recompiles the classes of every plan it runs again
+        .config(map={k: str(v) for k, v in STATIC_CONFS.items()})
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")
