@@ -6,8 +6,9 @@ The reference (ocean-mhw/mhw3d-detection) is an xarray/dask array library;
 this engine models the same semantics relationally:
 
 - dense labeled arrays  -> long-format DataFrames ``ts(cell_id, time, temp)``
-- per-day-of-year climatology arrays -> a small dimension table
-  ``clim(cell_id, doy, seas, thresh)`` (broadcast-join side)
+- per-day-of-year climatology arrays -> one row of 366-slot arrays per
+  cell, joined to the series on ``cell_id`` in the detection stage
+  (or read back as ``clim(cell_id, doy, seas, thresh)`` rows)
 - the fixed-shape NaN-padded event arrays -> a variable-length
   ``events(cell_id, event_id, date_start, date_end, ...)`` DataFrame
 

@@ -279,7 +279,7 @@ def clim_arrays(
 
     Either way the physical plan is a single per-cell aggregate plus
     JVM higher-order functions — no join, no window sort — and the
-    severity broadcast is one row per cell instead of cells*366 rows.
+    severity join reads one row per cell instead of cells*366 rows.
 
     Output: (cell_id, <col>_arr ...) — in "full" mode a dense 366-slot
     array (slot d, 1-based, is DOY d); in "valid" mode a doy->value MAP

@@ -1,11 +1,14 @@
 """Severity computation (the reference's EP2, common/core.py:200-236).
 
-One broadcast equi-join plus projections — a single narrow stage after
-the broadcast exchange:
+One left equi-join of the series to its climatology plus projections:
 
     ts JOIN clim ON (cell_id, clim_doy(time))
     T_anom   = temp - seas
     severity = T_anom / (thresh - seas [+ 1e-9])
+
+The per-cell array form (what `detect_mhw` runs) is co-partitioned
+with the series on cell_id; the row form is broadcast
+(:func:`calculate_severity` says why).
 """
 
 from __future__ import annotations
@@ -26,25 +29,31 @@ def calculate_severity(
     temp_col: str = "temp",
     mode: str = "legacy",
 ) -> DataFrame:
-    """Join the (tiny) climatology dim table to the (huge) series and
-    project anomaly + severity.
+    """Left-join the climatology to the series and project anomaly +
+    severity. A series row with no clim row keeps NULL seas/thresh.
 
-    The clim side is 366 rows/cell — always the broadcast side at scale
-    (the reference ships it into every dask task for the same reason,
-    speed_benchmark.ipynb cell 8's graph-size warning).
+    Array-form clim (`seas_arr`/`thresh_arr`, one row per cell) is the
+    build side of a shuffle-hash join on cell_id. It is not broadcast:
+    at 2 x 366 doubles, about 5.9 KB per cell, a million cells would
+    collect about 5.9 GB on the driver, and the broadcast's job runs the
+    per-cell climatology ahead of everything else on one task. The
+    series' cell_id exchange is the one the detection window needs
+    anyway, so the climatology runs in the detection stage and that
+    stage adds no exchange of its own.
+
+    Row-form clim (366 rows per cell, keyed (cell_id, doy)) is
+    broadcast: its key is not the window's, so co-partitioning it would
+    add an exchange (the reference ships it into every dask task for
+    the same reason, speed_benchmark.ipynb cell 8's graph-size warning).
     """
-    c = F.broadcast(clim)
     if "seas_arr" in clim.columns:
-        # Dense-array clim (pooled_climatology(output="arrays")): one row
-        # per cell, seas/thresh read out by DOY slot. The broadcast table
-        # is cells rows instead of cells*366 and the join key is cell_id
-        # alone. NaN slots (missing DOYs / poisoned windows) map back to
-        # NULL so every downstream null-skipping aggregate behaves
-        # identically to the row-form path.
+        # seas/thresh are read out by DOY slot. NaN slots (missing DOYs
+        # / poisoned windows) map back to NULL so every downstream
+        # null-skipping aggregate behaves identically to the row form.
         nn = lambda x: F.when(~F.isnan(x), x)  # noqa: E731
         joined = (
             ts.withColumn("doy", clim_doy(F.col(time_col)))
-            .join(c, on=[cell_col], how="left")
+            .join(clim.hint("shuffle_hash"), on=[cell_col], how="left")
             .withColumns(
                 {
                     "seas": nn(F.element_at("seas_arr", F.col("doy"))),
@@ -56,7 +65,7 @@ def calculate_severity(
     else:
         joined = (
             ts.withColumn("doy", clim_doy(F.col(time_col)))
-            .join(c, on=[cell_col, "doy"], how="left")
+            .join(F.broadcast(clim), on=[cell_col, "doy"], how="left")
         )
     t_anom = F.col(temp_col) - F.col("seas")
     if mode == "legacy":

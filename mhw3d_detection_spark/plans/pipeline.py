@@ -6,11 +6,13 @@ The canonical flow (reference README.md:53-64, design doc steps 1-3):
     calculate_severity                        ->  ts + (t_anom, severity)
     detect + calculate_mhw_metrics            ->  events table
 
-Physical plan at scale (SURVEY.md §4): scan(pruned) -> shuffle on
-(cell, doy) for the clim agg -> broadcast-join clim back -> ONE
-shuffle on cell for the detection window, after which the run
-partials, event assembly and metric merge all run in that stage
-(operators/detection.py fused_detect_metrics).
+Physical plan at scale: the clim aggregates run on a cell_id
+partitioning of the clim input, the series gets ONE shuffle on
+cell_id, and the two meet in a shuffle-hash join on cell_id
+(operators/severity.py) inside the stage that then runs the detection
+window, the run partials, event assembly and metric merge
+(operators/detection.py fused_detect_metrics). The climatology is
+not broadcast; calculate_severity says why.
 """
 
 from __future__ import annotations
@@ -68,9 +70,9 @@ def detect_mhw(
     # Dense-array clim path for BOTH smoothing modes: the whole clim
     # tail (densify + Feb-29 + circular smooth — full's dense-366 axis
     # or valid's compressed M3/Ly sequence) collapses into per-cell
-    # array transforms and the severity broadcast shrinks to one row
-    # per cell — no densify join, no Feb-29 join, no smooth window
-    # exchange (operators/climatology.py clim_arrays).
+    # array transforms and the severity join reads one row per cell —
+    # no densify join, no Feb-29 join, no smooth window exchange
+    # (operators/climatology.py clim_arrays).
     clim_output = "arrays"
     ts_s = signed(ts)
     clim_src = signed(clim_ts) if clim_ts is not None else ts_s

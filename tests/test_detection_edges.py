@@ -236,3 +236,96 @@ def test_rate_edges_peak_on_series_boundary(spark, first, last):
     tail = up if last == 0 else up[-1:] + up[:-1]
     temps = np.array(head + [9.0, 9.5, 10.0, 9.0] + tail)
     _check_both_paths(spark, temps, dict(min_duration=5, max_gap=2), len(head) + 2)
+
+
+# --- alternate climatology source (detect_mhw(clim_ts=...)) ----------
+#
+# The clim arrays are built from clim_ts and left-joined to the scored
+# series on cell_id. A cell that clim_ts does not cover keeps its rows
+# with NULL seas/thresh, so it never exceeds and yields no events.
+
+
+def _seasonal_cells(cells, start, end, seed, heat=()):
+    """Seasonal cycle + seeded noise per cell; ``heat`` holds
+    (day index, days, +degrees) warm spells added to every cell."""
+    times = pd.date_range(start, end, freq="D")
+    ords = np.array([t.toordinal() for t in times.date])
+    rng = np.random.default_rng(seed)
+    frames = []
+    for c in cells:
+        temp = 15.0 + c + 4.0 * np.cos(2 * np.pi * (ords - 150) / 365.25)
+        temp += 0.6 * rng.standard_normal(len(ords))
+        for i, n, d in heat:
+            temp[i + 7 * c : i + 7 * c + n] += d
+        frames.append(pd.DataFrame({"cell_id": c, "time": times.date, "temp": temp}))
+    return pd.concat(frames, ignore_index=True)
+
+
+@pytest.mark.parametrize("pool_mode", ["grid", "series"])
+def test_alternate_clim_source_left_join(spark, pool_mode):
+    from mhw3d_detection_spark.operators.climatology import pooled_climatology
+    from mhw3d_detection_spark.operators.severity import calculate_severity
+    from mhw3d_detection_spark.plans import detect_mhw
+    from tests.oracle_np import (
+        clim_doy_np,
+        grid_clim_threshold_np,
+        pooled_clim_threshold_np,
+    )
+
+    oracle_clim = {
+        "grid": grid_clim_threshold_np,
+        "series": pooled_clim_threshold_np,
+    }[pool_mode]
+    # clim from 1990-1995 for cells 0 and 1 only; 1996-1999 scored on
+    # cells 0, 1 and 2
+    ref = _seasonal_cells([0, 1], "1990-01-01", "1995-12-31", seed=7)
+    obs = _seasonal_cells(
+        [0, 1, 2], "1996-01-01", "1999-12-31", seed=8,
+        heat=[(30, 12, 3.0), (400, 20, 2.5), (1000, 9, 4.0), (1440, 15, 3.0)],
+    )
+    ts, clim_ts = spark.createDataFrame(obs), spark.createDataFrame(ref)
+
+    got = detect_mhw(ts, clim_ts=clim_ts, pool_mode=pool_mode).toPandas()
+    assert set(got["cell_id"]) == {0, 1}
+    for c in (0, 1):
+        r = ref[ref["cell_id"] == c]
+        o = obs[obs["cell_id"] == c]
+        seas, thresh = oracle_clim(pd.DatetimeIndex(r["time"]), r["temp"].values)
+        slot = clim_doy_np(pd.DatetimeIndex(o["time"])) - 1
+        exp = mhw_events_np(
+            o["temp"].values, seas[slot], thresh[slot], min_duration=5, max_gap=2
+        )
+        assert len(exp) >= 4, exp
+        g = got[got["cell_id"] == c].sort_values("event_id")
+        assert len(g) == len(exp), (g, exp)
+        day = list(o["time"])
+        for row, e in zip(g.to_dict("records"), exp):
+            assert row["event_id"] == e["event_id"]
+            assert (row["date_start"], row["date_end"], row["date_peak"]) == (
+                day[e["start"]],
+                day[e["end"]],
+                day[e["peak"]],
+            ), (row, e)
+            for k, v in e.items():
+                if k in ("event_id", "start", "end", "peak"):
+                    continue
+                if isinstance(v, (float, np.floating)):
+                    assert math.isclose(row[k], v, rel_tol=1e-8, abs_tol=1e-8), (k, row, e)
+                else:
+                    assert row[k] == v, (k, row, e)
+
+    # the uncovered cell keeps every row, with NULL clim
+    clim = pooled_climatology(clim_ts, pool_mode=pool_mode, output="arrays")
+    sev = calculate_severity(ts, clim).filter(F.col("cell_id") == 2)
+    uncovered = sev.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count("seas").alias("seas"),
+        F.count("thresh").alias("thresh"),
+        F.count("severity").alias("severity"),
+    ).first()
+    assert uncovered.asDict() == {
+        "rows": int((obs["cell_id"] == 2).sum()),
+        "seas": 0,
+        "thresh": 0,
+        "severity": 0,
+    }

@@ -10,6 +10,7 @@ cluster run would reveal it.
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from mhw3d_detection_spark.operators.climatology import pooled_climatology
@@ -211,6 +212,40 @@ def test_fused_detection_one_series_window(spark, sf_dir):
         r"lag\([^)]*\) windowspecdefinition\(cell_id#\d+L?, time#", plan
     )
     assert len(lags) == 1, plan
+
+
+@pytest.mark.parametrize("pool_mode", ["grid", "series"])
+def test_detect_mhw_clim_co_partitioned_with_series(spark, sf_dir, pool_mode):
+    # The per-cell clim arrays join the series as the build side of a
+    # shuffle-hash join on cell_id, not as a broadcast: the clim side
+    # is already hash-partitioned by cell_id (its aggregates are keyed
+    # on the cell), the series gets the one cell_id exchange the
+    # detection window needs anyway, and everything above the join (the
+    # enrich window, the run partials, every runs-table step) reuses
+    # that partitioning. The series is read straight off the scan, so
+    # the two exchanges counted are the pipeline's own.
+    from mhw3d_detection_spark.plans import detect_mhw
+
+    o = load_table(spark, sf_dir, "orders")
+    ts = o.select(
+        (F.col("o_custkey") % 10).alias("cell_id"),
+        F.to_date("o_orderdate").alias("time"),
+        F.col("o_totalprice").alias("temp"),
+    )
+    plan = _executed(
+        detect_mhw(ts, baseline=(1995, 2000), min_duration=3, pool_mode=pool_mode)
+    )
+    assert "BroadcastExchange" not in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    lines = plan.splitlines()
+    joins = [i for i, line in enumerate(lines) if "ShuffledHashJoin" in line]
+    assert len(joins) == 1, plan
+    assert re.search(
+        r"ShuffledHashJoin \[cell_id#\d+L?\], \[cell_id#\d+L?\], LeftOuter, BuildRight",
+        lines[joins[0]],
+    ), plan
+    assert _count_exchanges(plan) == 2, plan
+    assert not any("Exchange" in line for line in lines[: joins[0]]), plan
 
 
 def _merge_plan(spark, sf_dir) -> str:
