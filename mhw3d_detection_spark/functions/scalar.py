@@ -32,6 +32,16 @@ def severity_best_practice(
     return F.when(denom > F.lit(eps), t_anom / denom).otherwise(F.lit(None))
 
 
+def rel_thresh_norm(temp: Column, seas: Column, thresh: Column) -> Column:
+    """Normalized exceedance ``(temp - thresh) / (thresh - seas)``, the
+    category band's argument (marineHeatWaves.py:385), as the IEEE
+    quotient NumPy gives: a zero denominator yields +-inf, or NaN for a
+    zero numerator, where ANSI division would raise. A constant
+    baseline (e.g. an ice-clamped cell) has ``thresh == seas``."""
+    num, den = temp - thresh, thresh - seas
+    return F.when(den == 0, num * F.lit(float("inf"))).otherwise(num / den)
+
+
 def category_label(rel_thresh_norm_peak: Column) -> Column:
     """Map the event's peak normalized exceedance to a category string.
 

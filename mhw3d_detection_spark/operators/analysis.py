@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mhw3d_detection_spark.functions.scalar import rel_thresh_norm
+
 
 def pad_interpolate(
     ts: DataFrame,
@@ -543,8 +545,7 @@ def category_days_per_block(
     spine = _block_spine(spans, cell_col, block_length)
     cat = F.floor(
         F.lit(1.0)
-        + (F.col(temp_col) - F.col(thresh_col))
-        / (F.col(thresh_col) - F.col(seas_col))
+        + rel_thresh_norm(F.col(temp_col), F.col(seas_col), F.col(thresh_col))
     )
     d = _with_block(
         ts_sev.withColumn("__day", F.to_date(time_col)).join(

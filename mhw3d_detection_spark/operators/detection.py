@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from mhw3d_detection_spark.functions.scalar import CATEGORIES
+from mhw3d_detection_spark.functions.scalar import CATEGORIES, rel_thresh_norm
 
 
 def exceedance(
@@ -90,35 +90,65 @@ def enrich_series(
     spans runs — rate-formula neighbors, series extent, moment centers —
     is derived afterwards on the runs table (:func:`_run_boundaries`,
     :func:`_recenter`), so the series carries exactly one ordered
-    window.
+    window. Runs are row-based: an absent day does not end a run.
+    ``rel_thresh_norm`` is the IEEE quotient (:func:`rel_thresh_norm`),
+    so a ``thresh == seas`` day reads +-inf / NaN instead of raising
+    under ANSI.
     """
+    return _enrich(
+        ts_sev, cell_col, time_col, temp_col, seas_col, thresh_col, flag_col
+    )
+
+
+def _enrich(
+    ts_sev: DataFrame,
+    cell_col: str,
+    time_col: str,
+    temp_col: str,
+    seas_col: str,
+    thresh_col: str,
+    flag_col: str,
+    *,
+    calendar_breaks: bool = False,
+) -> DataFrame:
+    """:func:`enrich_series`; ``calendar_breaks`` also ends a run where
+    the previous row is more than one day back (the map side of
+    :func:`detect_partials`)."""
     w = Window.partitionBy(cell_col).orderBy(time_col)
     flag = F.coalesce(F.col(flag_col), F.lit(False))
+    brk = (
+        F.datediff(time_col, F.lag(time_col).over(w)) > 1
+        if calendar_breaks
+        else None
+    )
+    temp, seas, thresh = F.col(temp_col), F.col(seas_col), F.col(thresh_col)
 
     # single batched projection: one analysis pass, one Window node
     return ts_sev.withColumns(
         {
-            "rel_seas": F.col(temp_col) - F.col(seas_col),
-            "rel_thresh": F.col(temp_col) - F.col(thresh_col),
-            "rel_thresh_norm": (F.col(temp_col) - F.col(thresh_col))
-            / (F.col(thresh_col) - F.col(seas_col)),
-            "t_abs": F.col(temp_col),
+            "rel_seas": temp - seas,
+            "rel_thresh": temp - thresh,
+            "rel_thresh_norm": rel_thresh_norm(temp, seas, thresh),
+            "t_abs": temp,
             "__flag": flag,
-            "__run": _run_ids(flag, w).cast("long"),
+            "__run": _run_ids(flag, w, brk).cast("long"),
         }
     )
 
 
-def _run_ids(flag: Column, w: WindowSpec) -> Column:
+def _run_ids(flag: Column, w: WindowSpec, brk: Column | None = None) -> Column:
     """Gaps-and-islands run ids over the ordered window ``w``: a change
     point wherever ``flag`` differs from the previous row's (or there is
-    no previous row), and the running count of change points as the id
-    (reference RLE kernel common/core.py:53-69). The one RLE expression
-    behind :func:`rle_runs`, :func:`enrich_series` and the cross-batch
-    run coalescing of :func:`merge_detect_partials`. ``lag`` appears
-    once: a missing previous row makes the comparison NULL, which the
-    ``coalesce`` counts as a change."""
+    no previous row) or the optional ``brk`` holds, and the running
+    count of change points as the id (reference RLE kernel
+    common/core.py:53-69). The one RLE expression behind
+    :func:`rle_runs`, :func:`enrich_series`, :func:`detect_partials`
+    and the cross-batch run coalescing of :func:`merge_detect_partials`.
+    ``lag`` appears once: a missing previous row makes the comparison
+    NULL, which the ``coalesce`` counts as a change."""
     changed = F.coalesce(flag != F.lag(flag).over(w), F.lit(True))
+    if brk is not None:
+        changed = changed | brk
     return F.sum(changed.cast("int")).over(
         w.rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -617,23 +647,27 @@ def detect_partials(
     with_rates: bool = True,
     with_categories: bool = True,
 ) -> DataFrame:
-    """Incremental detection, map side: compress ONE time-batch of a
+    """Incremental detection, map side: compress ONE batch of a
     severity-joined series (cell, time, temp, seas, thresh) into
     mergeable run partials — the detection analogue of
-    ``clim_partials`` for chunked / backfill processing (the
-    reference's chunk-at-a-time dask model, reprocessed relationally).
+    ``clim_partials`` for chunked / backfill / streaming processing
+    (the reference's chunk-at-a-time dask model, reprocessed
+    relationally).
 
     Each output row is one run (exceeding or not) of the batch carrying
     associative state (:func:`_run_partials`); cross-run state, which
-    a batch cannot see, is derived by the merge. Feed the union of all
-    batches' partials to :func:`merge_detect_partials`; the result
-    equals the whole-series :func:`fused_detect_metrics` output up to
-    floating-point reassociation in the re-centered moments (~1e-12
-    relative; all other columns exactly), events spanning batch
-    boundaries included — a run cut by the boundary is re-joined at
-    merge, since the whole-series RLE would never have split it.
-    Batches must partition the time axis per cell; they may arrive in
-    any order.
+    a batch cannot see, is derived by the merge. A batch's runs also
+    end wherever the batch holds no row for a day (a calendar break),
+    so a run never spans a day the batch lacks: another batch's rows
+    can fall only BETWEEN this batch's runs, never inside one.
+
+    CONTRACT: the batches together hold each (cell, day) at most once;
+    beyond that they may slice the series any way — time slices,
+    interleaved days, late days — and arrive in any order. Feed the
+    union of all batches' partials to :func:`merge_detect_partials`;
+    the result equals the whole-series :func:`fused_detect_metrics`
+    output up to floating-point reassociation in the re-centered
+    moments (~1e-12 relative; all other columns exactly).
 
     At 100 TB this is the shape that avoids ever holding the full
     series in one job: per-batch partials are a tiny table per chunk,
@@ -641,14 +675,15 @@ def detect_partials(
     flagged = exceedance(
         ts_sev, temp_col=temp_col, seas_col=seas_col, thresh_col=thresh_col
     )
-    enriched = enrich_series(
+    enriched = _enrich(
         flagged,
-        cell_col=cell_col,
-        time_col=time_col,
-        temp_col=temp_col,
-        seas_col=seas_col,
-        thresh_col=thresh_col,
-        flag_col="exceed",
+        cell_col,
+        time_col,
+        temp_col,
+        seas_col,
+        thresh_col,
+        "exceed",
+        calendar_breaks=True,
     )
     return _run_partials(
         enriched,
@@ -674,25 +709,43 @@ def merge_detect_partials(
 
     Runs-sized steps (the series itself never reappears):
 
-    1. Coalesce runs across batch boundaries: order each cell's runs by
+    1. Coalesce runs across batches: order each cell's runs by
        run_start and merge consecutive SAME-FLAG runs (the whole-series
-       RLE is row-based, so a flag run cut by a batch boundary — even
-       across a calendar gap in the data — is one run), their moments
-       first re-centered on one center (:func:`_recenter`, which the
-       event merge shares). The coalesced group id increases in time,
-       so it is the merged run's ``__run``.
+       RLE is row-based, so flag runs that only a batch boundary or a
+       calendar break separates are one run), their moments first
+       re-centered on one center (:func:`_recenter`, which the event
+       merge shares). Because no batch's run spans a day it lacks, the
+       run_start order interleaves every batch's runs exactly as the
+       whole series orders its rows. A run that starts on or before
+       the previous run's end means two batches hold one (cell, day):
+       the merge raises instead of counting that day twice. The
+       coalesced group id increases in time, so it is the merged run's
+       ``__run``.
     2. Derive the cross-run state the batches could not see
        (:func:`_run_boundaries`, shared with the fused tail) and run the
        standard event assembly + metric merge
        (:func:`_metrics_from_partials`).
 
+    A store whose writer did not break runs at calendar gaps still
+    merges exactly when its batches are time slices (same schema).
     Extra batch columns (older stores' batch-local boundary columns, a
     store's ``batch`` partition) drop out at the coalescing aggregate.
     Every step keys on the cell, so the union's one exchange on
     ``cell_id`` serves every window and aggregate; nothing is persisted.
     """
     w = Window.partitionBy("cell_id").orderBy("run_start")
-    g = _recenter(partials.withColumn("__g", _run_ids(F.col("flag"), w)), "__g")
+    held_twice = F.col("run_start") <= F.lag("run_end").over(w)
+    g = F.when(
+        held_twice,
+        F.raise_error(
+            F.format_string(
+                "merge_detect_partials: cell %s, day %s is held by two batches",
+                F.col("cell_id"),
+                F.col("run_start").cast("string"),
+            )
+        ),
+    ).otherwise(_run_ids(F.col("flag"), w))
+    g = _recenter(partials.withColumn("__g", g), "__g")
     merge_aggs = [
         F.first("flag").alias("flag"),
         F.min("run_start").alias("run_start"),

@@ -9,7 +9,6 @@ from mhw3d_detection_spark.streaming.sessionize import (  # noqa: F401
     streaming_dedup,
     streaming_despike_gate,
     streaming_detect_partials,
-    streaming_event_sessions,
     streaming_feature_hash,
     streaming_frequency,
     streaming_histogram,
@@ -26,7 +25,6 @@ from mhw3d_detection_spark.streaming.stateful import (  # noqa: F401
     streaming_cusum_alarms,
     streaming_current_state,
     streaming_drift_gate,
-    streaming_detect_events_exact,
     streaming_ewma,
 )
 from mhw3d_detection_spark.streaming.sessionize import (  # noqa: F401,E402

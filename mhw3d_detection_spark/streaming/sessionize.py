@@ -1,66 +1,25 @@
-"""Structured-Streaming twins of the batch sessionization operators
-(SURVEY.md §2.10 — an *extension*: the reference is pure batch).
+"""Structured-Streaming twins of the batch operators (SURVEY.md §2.10
+— an *extension*: the reference is pure batch).
 
-The batch detection chain W3 (RLE) + W5 (gap joining) is exactly what
-``F.session_window`` computes incrementally: rows land in one session
-while consecutive timestamps differ by at most the gap. With daily
-samples and the reference's ``maxGap`` missing-day tolerance, the gap
-duration is ``maxGap + 1`` days.
+MHW event detection streams through ONE face,
+:func:`streaming_detect_partials`: every micro-batch is compressed to
+the batch engine's own run partials, and
+:func:`~mhw3d_detection_spark.operators.detection.merge_detect_partials`
+over the store yields the batch events — the same RLE, the W4
+min-duration filter BEFORE W5 gap joining, the same event ids. The
+remaining operators are windowed aggregates, stream-static joins and
+stateless gates.
 
-Semantic note, documented divergence: the frozen batch contract filters
-runs shorter than ``minDuration`` BEFORE gap joining; a streaming
-session window cannot re-order those stages, so the streaming twin
-sessionizes first and filters sessions afterwards (`min_total_days`).
-Events whose runs are individually short but chain across small gaps
-appear here and not in the batch output. This matches stock streaming
-session semantics and is the documented trade for incremental state.
-
-Scale notes: all operators below are keyed by cell — state partitions
-by the grouping key; the watermark bounds state size (late rows beyond
-it are dropped); output mode is append-only once a session closes.
+Scale notes: all stateful operators below are keyed by cell (or by
+their own key) — state partitions by the grouping key; the watermark
+bounds state size (late rows beyond it are dropped); output mode is
+append-only once a window closes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def streaming_event_sessions(
-    stream: DataFrame,
-    *,
-    cell_col: str = "cell_id",
-    time_col: str = "time",
-    flag_col: str = "exceed",
-    max_gap_days: int = 2,
-    min_total_days: int = 5,
-    watermark: str = "7 days",
-) -> DataFrame:
-    """W3+W5 streaming twin: exceedance rows -> closed event sessions
-    ``(cell_id, date_start, date_end, n_days)``.
-
-    A session admits the next row while it is within ``max_gap_days+1``
-    days of the previous one — identical interval-merging to the batch
-    gap join (detection.detect_events); the watermark closes sessions
-    and bounds per-cell state.
-    """
-    gap = f"{max_gap_days + 1} days"
-    sess = (
-        stream.filter(F.col(flag_col))
-        .withWatermark(time_col, watermark)
-        .groupBy(F.col(cell_col), F.session_window(F.col(time_col), gap))
-        .agg(F.count(F.lit(1)).alias("n_days"))
-    )
-    return sess.select(
-        cell_col,
-        F.to_date(F.col("session_window.start")).alias("date_start"),
-        # session end = last event time + gap; the last *sample day* is
-        # end - gap (daily data), mirroring the batch max(time)
-        F.to_date(
-            F.col("session_window.end") - F.expr(f"INTERVAL {max_gap_days + 1} DAYS")
-        ).alias("date_end"),
-        "n_days",
-    ).filter(F.col("n_days") >= min_total_days)
 
 
 def streaming_windowed_stats(
@@ -114,10 +73,10 @@ def streaming_severity(
     climatology — the stream-static broadcast join (each micro-batch
     joins the dim table; no streaming state at all). The projection
     reuses the exact batch severity kernels (``functions.scalar``),
-    same ``mode`` default as ``calculate_severity``, plus the
-    exceedance flag that feeds the stateful detector downstream — i.e.
-    this is the operator that turns a raw sensor stream into the input
-    of :func:`streaming.stateful.streaming_detect_events_exact`.
+    same ``mode`` default as ``calculate_severity`` — i.e. this is the
+    operator that turns a raw sensor stream into the input of
+    :func:`streaming_detect_partials` (which derives its own
+    exceedance flag).
     """
     from mhw3d_detection_spark.functions.calendar import clim_doy
     from mhw3d_detection_spark.functions.scalar import (
@@ -135,13 +94,7 @@ def streaming_severity(
         sev = severity_best_practice(t_anom, F.col("thresh"), F.col("seas"))
     else:
         raise ValueError(f"unknown severity mode {mode!r}")
-    return (
-        joined.withColumn("t_anom", t_anom)
-        .withColumn("severity", sev)
-        .withColumn(
-            "exceed", F.coalesce(F.col(temp_col) > F.col("thresh"), F.lit(False))
-        )
-    )
+    return joined.withColumns({"t_anom": t_anom, "severity": sev})
 
 
 def streaming_dedup(
@@ -598,7 +551,7 @@ def streaming_detect_partials(
     with_rates: bool = True,
     with_categories: bool = True,
 ):
-    """Streaming face of incremental detection: every micro-batch of a
+    """The one streaming MHW detector: every micro-batch of a
     severity-scored stream is compressed to mergeable run partials
     (:func:`~mhw3d_detection_spark.operators.detection.detect_partials`)
     and written to a partials store; running
@@ -616,16 +569,17 @@ def streaming_detect_partials(
     a 100 TB backfill + live tail. Each micro-batch OVERWRITES its own
     ``batch=<id>`` partition directory, so foreachBatch's at-least-once
     replays are idempotent — a re-run batch replaces its rows instead
-    of appending duplicates (duplicated run partials would double
-    run_days/moment sums in the merge). The extra ``batch`` partition
-    column is inert downstream: the merge's run coalescing drops it at
-    the first aggregate.
+    of appending duplicates. The extra ``batch`` partition column is
+    inert downstream: the merge's run coalescing drops it at the first
+    aggregate.
 
-    CONTRACT: micro-batches must partition the time axis per cell into
-    non-interleaved slices (e.g. time-ordered file arrival). A batch's
-    internal RLE treats its own rows as consecutive, so rows of one
-    cell arriving out of time order across batches would mis-join runs
-    — the same in-order requirement as the stateful detector.
+    CONTRACT: the micro-batches together hold each (cell, day) at most
+    once; they may otherwise arrive in ANY order — late days, days
+    inside an earlier batch's run, batches out of time order — with no
+    watermark, because a batch's runs never span a day it lacks
+    (:func:`~mhw3d_detection_spark.operators.detection.detect_partials`).
+    A day delivered by two batches makes the merge raise rather than
+    count it twice.
     """
     from mhw3d_detection_spark.operators.detection import detect_partials
 

@@ -1,47 +1,25 @@
-"""Custom stateful streaming operator: EXACT batch detection semantics,
-incrementally (SURVEY.md §2.10 extension surface).
+"""Custom stateful streaming operators (``applyInPandasWithState``)
+for ORDER-sensitive monitors (SURVEY.md §2.10 extension surface): the
+CUSUM change-point screen, the EWMA smoother and the windowed drift
+gate. Each is bit-identical to its batch twin in
+``operators.analysis`` for any arrival order within the watermark.
 
-``streaming_event_sessions`` (stock ``session_window``) documents a
-semantic divergence from the frozen batch contract: a session window
-cannot apply the min-duration filter to *runs* before gap-joining
-(reference order: common/core.py:67-74 — W4 strictly before W5). This
-operator closes that gap with ``applyInPandasWithState``: per-cell
-state buffers the exceed days still inside the watermark window plus
-the open (already gap-joined) event and the per-cell event counter, so
-the emitted events equal the batch ``detect_events`` output — same
-run/min-duration/gap-join ordering, same event_id numbering — for ANY
-arrival order of the rows, as long as late data respects the watermark
-(rows later than the declared delay are dropped by Spark itself before
-they reach the state function; that is the standard streaming contract,
-not an extra assumption of this operator).
+Shared design (ordinals are days since 1970-01-01): rows buffer per
+key until the watermark passes their day (CUSUM, EWMA) or their
+window's end (drift), because only then is their fold order or their
+window final — Spark itself drops rows later than the declared delay
+before they reach the state function, the standard streaming
+contract. Folded rows leave the buffer, so per-key state is the
+monitor's own accumulator plus at most the watermark delay of pending
+rows; an event-time timeout at the buffered horizon drains the buffer
+once the stream goes quiet.
 
-Incremental design (ordinals are days since 1970-01-01):
-
-- ``days``  — the pending exceed-day buffer: days whose run membership
-  could still change. Out-of-order days (a late day that PREPENDS a
-  run, or bridges two runs) are handled by re-deriving runs from the
-  buffer each batch instead of keeping a single ``[run_s, run_e]``
-  frontier.
-- fold frontier: with watermark ``wm``, any future row has day >=
-  ``wm_day = floor(wm / 1 day)``. A run ending at ``e`` with
-  ``e + 1 < wm_day`` can never again be extended, prepended or bridged,
-  and no earlier day can arrive — so the run is FINAL and flows through
-  the batch chain (min-duration check, gap-join into the open event,
-  emit on gap > max_gap). Folded days leave the buffer: state is
-  bounded by the watermark delay per cell, independent of history.
-- ``event`` — open event ``[ev_s, ev_e]`` built from folded qualifying
-  runs, exactly the batch W5 chain.
-- event-time timeout at ``latest_activity + max_gap + 2 days``
-  (clamped to watermark + 1 ms — Spark rejects timestamps at or below
-  the current watermark): once the watermark passes that point no
-  admissible row can extend any pending run (adjacency) or merge with
-  the open event (gap bound), so everything pending folds and the open
-  event flushes. Only the event counter survives, so a later burst for
-  the cell continues the numbering.
-
-Scale: state partitions by cell (the same key every other per-cell
-operator shuffles on); per-cell state is the event counter plus at most
-``watermark_delay + max_gap + 2`` buffered day ordinals.
+MHW event detection is NOT here: its one streaming face is
+:func:`~mhw3d_detection_spark.streaming.sessionize.streaming_detect_partials`
+feeding
+:func:`~mhw3d_detection_spark.operators.detection.merge_detect_partials`,
+the batch partial algebra itself, which needs no watermark and takes
+batches in any arrival order.
 """
 
 from __future__ import annotations
@@ -57,7 +35,6 @@ from pyspark.sql.types import (
     BooleanType,
     DateType,
     DoubleType,
-    IntegerType,
     LongType,
     StructField,
     StructType,
@@ -85,157 +62,6 @@ def _duration_ms(spec: str) -> int:
         return int(n) * _DURATION_UNIT_MS[unit.lower()]
     except KeyError:
         raise ValueError(f"unsupported duration unit in {spec!r}") from None
-
-_OUT_SCHEMA = StructType(
-    [
-        StructField("cell_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("date_start", DateType()),
-        StructField("date_end", DateType()),
-        StructField("duration", IntegerType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("days", ArrayType(LongType())),
-        StructField("ev_s", LongType()),
-        StructField("ev_e", LongType()),
-        StructField("next_id", LongType()),
-    ]
-)
-
-
-def _runs(sorted_days: list[int]) -> Iterator[tuple[int, int]]:
-    """RLE over sorted distinct day ordinals -> (start, end) runs."""
-    i, n = 0, len(sorted_days)
-    while i < n:
-        j = i
-        while j + 1 < n and sorted_days[j + 1] == sorted_days[j] + 1:
-            j += 1
-        yield sorted_days[i], sorted_days[j]
-        i = j + 1
-
-
-def streaming_detect_events_exact(
-    stream: DataFrame,
-    *,
-    cell_col: str = "cell_id",
-    time_col: str = "time",
-    flag_col: str = "exceed",
-    min_duration: int = 5,
-    max_gap: int = 2,
-    watermark: str = "7 days",
-) -> DataFrame:
-    """Streaming twin of :func:`detect_events` with IDENTICAL semantics
-    (min-duration on runs BEFORE gap joining, batch event_id parity),
-    robust to out-of-order arrival within the watermark window.
-
-    Input: a stream of daily rows carrying a boolean ``flag_col``.
-    Output (append mode): closed events
-    ``(cell_id, event_id, date_start, date_end, duration)``.
-    """
-
-    def process(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf, ev_s, ev_e, next_id = state.get
-            pending = set(buf)
-        else:
-            pending, ev_s, ev_e, next_id = set(), -1, -1, 1
-        emitted: list[tuple] = []
-
-        def emit_event() -> None:
-            nonlocal ev_s, ev_e, next_id
-            emitted.append((key[0], next_id, ev_s, ev_e))
-            next_id += 1
-            ev_s = ev_e = -1
-
-        def fold_run(rs: int, re_: int) -> None:
-            # W4 before W5, exactly like the batch chain.
-            nonlocal ev_s, ev_e
-            if re_ - rs + 1 >= min_duration:
-                if ev_s < 0:
-                    ev_s, ev_e = rs, re_
-                elif rs - ev_e - 1 <= max_gap:
-                    ev_e = re_
-                else:
-                    emit_event()
-                    ev_s, ev_e = rs, re_
-
-        if state.hasTimedOut:
-            # watermark passed latest + max_gap + 2: every pending run
-            # is final and nothing can merge with the open event
-            for rs, re_ in _runs(sorted(pending)):
-                fold_run(rs, re_)
-            if ev_s >= 0:
-                emit_event()
-            # keep only the event counter: a later burst for this cell
-            # must continue the numbering
-            state.update(([], -1, -1, next_id))
-        else:
-            for pdf in pdfs:
-                hit = pdf[pdf[flag_col].fillna(False)]
-                ts = pd.to_datetime(hit[time_col])
-                pending.update(
-                    (ts.values.astype("datetime64[D]").astype("int64")).tolist()
-                )
-            # fold the final prefix: future rows have day >= wm_day, so
-            # a run ending at e with e + 1 < wm_day can never change
-            wm_ms = state.getCurrentWatermarkMs()
-            wm_day = wm_ms // _MS_PER_DAY
-            keep: set[int] = set()
-            for rs, re_ in _runs(sorted(pending)):
-                if re_ + 1 < wm_day:
-                    fold_run(rs, re_)
-                else:
-                    # frontier run (and everything after): keep buffered
-                    keep.update(range(rs, re_ + 1))
-            pending = keep
-            latest = max(pending) if pending else ev_e
-            if pending or ev_s >= 0 or state.exists:
-                state.update((sorted(pending), ev_s, ev_e, next_id))
-                if latest >= 0:
-                    # flush horizon; clamped above the watermark (Spark
-                    # rejects timeout timestamps <= current watermark,
-                    # which a very late resumed cell would otherwise hit)
-                    horizon = (latest + max_gap + 2) * _MS_PER_DAY
-                    state.setTimeoutTimestamp(max(horizon, wm_ms + 1))
-
-        if emitted:
-            yield pd.DataFrame(
-                {
-                    "cell_id": [e[0] for e in emitted],
-                    "event_id": [e[1] for e in emitted],
-                    "date_start": [
-                        pd.Timestamp(e[2], unit="D").date() for e in emitted
-                    ],
-                    "date_end": [
-                        pd.Timestamp(e[3], unit="D").date() for e in emitted
-                    ],
-                    "duration": [int(e[3] - e[2] + 1) for e in emitted],
-                }
-            )
-
-    # No pre-filter on the exceed flag: event-time progress must come
-    # from every arriving sample (a pre-watermark filter gets pushed
-    # below the watermark node by Catalyst, so a quiet tail would never
-    # advance the clock past the last event's flush horizon). The state
-    # function drops non-exceed rows itself.
-    return (
-        stream.withWatermark(time_col, watermark)
-        .groupBy(F.col(cell_col).cast("long").alias("cell_id"))
-        .applyInPandasWithState(
-            process,
-            _OUT_SCHEMA,
-            _STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 _CUSUM_OUT_SCHEMA = StructType(
@@ -279,12 +105,12 @@ def streaming_cusum_alarms(
     ``target`` (dyadic-grid recursion ≡ the batch closed form; pinned
     by a parity test), for ANY arrival order within the watermark.
 
-    Incremental design, same frontier logic as
-    :func:`streaming_detect_events_exact`: CUSUM is ORDER-sensitive,
-    so rows buffer per cell until the watermark passes their day —
-    only then is their fold order final (Spark drops later-arriving
-    older rows at the watermark gate). State: the two accumulators +
-    the pending (day, value) buffer, bounded by the watermark delay.
+    Incremental design (the module's watermark buffer): CUSUM is
+    ORDER-sensitive, so rows buffer per cell until the watermark passes
+    their day — only then is their fold order final (Spark drops
+    later-arriving older rows at the watermark gate). State: the two
+    accumulators + the pending (day, value) buffer, bounded by the
+    watermark delay.
     Duplicate (cell, day) samples: last arrival wins (the batch twin
     assumes a unique daily grid; feed it one).
 

@@ -329,3 +329,46 @@ def test_alternate_clim_source_left_join(spark, pool_mode):
         "thresh": 0,
         "severity": 0,
     }
+
+
+def test_constant_baseline_thresh_equals_seas(spark):
+    # A constant baseline pool gives thresh == seas, so the category
+    # band's normalized exceedance divides by zero: it reads +inf on
+    # the exceeding days (an Extreme event), as in the NumPy oracle,
+    # instead of raising under ANSI division.
+    from mhw3d_detection_spark.plans import detect_mhw
+    from tests.oracle_np import clim_doy_np, grid_clim_threshold_np
+
+    times = pd.date_range("2000-01-01", "2003-12-31", freq="D")
+    temp = np.full(len(times), 15.0)
+    hot = (times >= "2002-06-10") & (times < "2002-06-21")
+    temp[hot] = 18.0
+    pdf = pd.DataFrame({"cell_id": 0, "time": times.date, "temp": temp})
+    got = (
+        detect_mhw(spark.createDataFrame(pdf), baseline=(2000, 2001), pool_mode="grid")
+        .toPandas()
+        .to_dict("records")
+    )
+    base = times.year <= 2001
+    seas, thresh = grid_clim_threshold_np(
+        times[base], temp[base], baseline=(2000, 2001)
+    )
+    slot = clim_doy_np(times) - 1
+    with np.errstate(divide="ignore", invalid="ignore"):
+        exp = mhw_events_np(temp, seas[slot], thresh[slot])
+    assert len(got) == len(exp) == 1
+    row, e = got[0], exp[0]
+    day = list(times.date)
+    assert (row["date_start"], row["date_end"], row["date_peak"]) == (
+        day[e["start"]],
+        day[e["end"]],
+        day[e["peak"]],
+    )
+    assert (row["category"], row["duration_extreme"]) == ("Extreme", 11)
+    for k, v in e.items():
+        if k in ("start", "end", "peak"):
+            continue
+        if isinstance(v, (float, np.floating)):
+            assert math.isclose(row[k], v, rel_tol=1e-8, abs_tol=1e-8), (k, row, e)
+        else:
+            assert row[k] == v, (k, row, e)

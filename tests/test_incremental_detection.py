@@ -1,15 +1,18 @@
 """Differential: incremental detection (per-batch run partials +
 merge) must equal the whole-series fused path exactly — including
-events whose runs are cut by a batch boundary, calendar gaps in the
-data at a boundary (the whole-series row-based RLE joins across them),
-NULL-temp days, and the re-centering of moment partials across
-batches with different centering constants.
+events whose runs are cut by a batch boundary, batches that interleave
+day by day (a batch's runs end at every day it does not hold, so
+another batch's days fall between them), calendar gaps in the data
+(the whole-series row-based RLE joins across them), NULL-temp days,
+and the re-centering of moment partials across batches with different
+centering constants. A day held by two batches is refused.
 """
 
 import datetime as dt
 import math
 import random
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -76,30 +79,37 @@ def test_merged_partials_equal_whole_series(
         max_gap=max_gap,
     )
 
+    # two slicings of the same rows: time slices at the cuts, and a
+    # per-day random assignment to as many batches (interleaved)
     cuts = sorted({int(f * len(temps)) for f in cut_fracs})
-    bounds = [DAY0 + dt.timedelta(days=c) for c in cuts]
-    batches = []
-    lo = None
-    for b in bounds + [None]:
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (F.col("time") >= F.lit(lo))
-        if b is not None:
-            cond = cond & (F.col("time") < F.lit(b))
-        batches.append(df.filter(cond))
-        lo = b
-    # batches may ARRIVE in any order (the declared contract): union
-    # them in a random permutation, not time order
-    random.Random(shuffle_seed).shuffle(batches)
-    parts = batches[0].transform(detect_partials)
-    for b in batches[1:]:
-        parts = parts.unionByName(detect_partials(b))
-    merged = merge_detect_partials(
-        parts,
-        min_duration=min_duration,
-        max_gap=max_gap,
-    )
+    rng = random.Random(shuffle_seed)
+    n_batches = len(cuts) + 1
+    slicings = [
+        [sum((r[1] - DAY0).days >= c for c in cuts) for r in rows],
+        [rng.randrange(n_batches) for _ in rows],
+    ]
+    for assign in slicings:
+        batches = [
+            spark.createDataFrame(
+                [r for r, k in zip(rows, assign) if k == j], df.schema
+            )
+            for j in range(n_batches)
+        ]
+        # batches may ARRIVE in any order: union them in a random
+        # permutation, not time order
+        rng.shuffle(batches)
+        parts = batches[0].transform(detect_partials)
+        for b in batches[1:]:
+            parts = parts.unionByName(detect_partials(b))
+        merged = merge_detect_partials(
+            parts,
+            min_duration=min_duration,
+            max_gap=max_gap,
+        )
+        _assert_same_events(whole, merged)
 
+
+def _assert_same_events(whole, merged):
     assert set(whole.columns) == set(merged.columns)
     cols = sorted(whole.columns)
     a = sorted(whole.select(*cols).collect(), key=lambda r: r["event_id"])
@@ -116,6 +126,23 @@ def test_merged_partials_equal_whole_series(
                 )
             else:
                 assert va == vb, (c, ra, rb)
+
+
+def test_day_in_two_batches_raises(spark):
+    """A (cell, day) delivered by two batches would count twice in
+    every sum of the merge; the merge refuses it instead."""
+    rows = [
+        (0, DAY0 + dt.timedelta(days=i), 2.0e5 + (15.0 if 5 <= i < 15 else 8.0),
+         2.0e5 + 10.0, 2.0e5 + 12.0)
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(
+        rows, "cell_id int, time date, temp double, seas double, thresh double"
+    )
+    again = df.filter(F.col("time") == F.lit(DAY0 + dt.timedelta(days=9)))
+    parts = detect_partials(df).unionByName(detect_partials(again))
+    with pytest.raises(Exception, match="cell 0, day 2021-01-10 is held by two batches"):
+        merge_detect_partials(parts).collect()
 
 
 def test_null_seas_first_batch_does_not_null_moments(spark):

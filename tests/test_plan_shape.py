@@ -275,6 +275,35 @@ def test_merge_detect_partials_no_renumbering(spark, sf_dir):
     assert "row_number" not in plan, plan
 
 
+def _node_counts(plan: str) -> dict:
+    nodes = re.findall(r"(?m)^[\s:|+-]*(Exchange|Window|Sort)\b", plan)
+    return {n: nodes.count(n) for n in ("Exchange", "Window", "Sort")}
+
+
+def test_detect_partials_calendar_break_adds_no_node(spark, sf_dir):
+    # The map side's calendar break (datediff to lag(time)) is one more
+    # lag over the RLE window's own (cell, time) spec: it joins the
+    # lag(flag) Window node. The plan keeps the enrich window's shape —
+    # two Windows (lag, then the running sum), one sort of the series,
+    # one sort for the (cell, run) aggregate, and the two exchanges of
+    # _prepartitioned_series itself.
+    from mhw3d_detection_spark.operators.detection import detect_partials
+
+    plan = _executed(detect_partials(_prepartitioned_series(spark, sf_dir)))
+    assert _node_counts(plan) == {"Exchange": 2, "Window": 2, "Sort": 2}, plan
+
+
+def test_merge_duplicate_day_check_adds_no_node(spark, sf_dir):
+    # The merge's duplicate-day check (lag(run_end) over the coalescing
+    # window's (cell, run_start) spec) joins a Window node that spec
+    # already has, so the two-batch merge plan keeps its node counts:
+    # the two batches' map sides (2 exchanges, 2 Windows, 2 Sorts each),
+    # the union's coalescing (2 Windows + the re-centering Window, 2
+    # Sorts), and the shared runs tail (5 Windows, 1 Sort).
+    plan = _merge_plan(spark, sf_dir)
+    assert _node_counts(plan) == {"Exchange": 4, "Window": 12, "Sort": 7}, plan
+
+
 def test_rank_return_periods_two_phase(spark, sf_dir):
     # W9 must NOT rank via an un-partitioned window (one partition for
     # the whole events table). The two-phase shape: a rangepartitioning

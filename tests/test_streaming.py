@@ -1,18 +1,25 @@
-"""Structured-Streaming twins (SURVEY.md §2.10): the streaming session
-window must reproduce the batch gap-join semantics on the same data,
-and streaming dedup must match batch dropDuplicates, both driven with
-a real file stream (availableNow trigger) into a memory sink."""
+"""Structured-Streaming twins (SURVEY.md §2.10), each driven with a
+real file stream (availableNow trigger). MHW detection streams through
+the run-partials store (``streaming_detect_partials`` ->
+``merge_detect_partials``), which must equal the batch fused tail on
+the union of the micro-batches for any slicing and arrival order; the
+windowed, dedup and gate twins must match their batch operators."""
 
 import datetime as dt
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from mhw3d_detection_spark.operators.detection import detect_events
+from mhw3d_detection_spark.operators.detection import (
+    enrich_series,
+    exceedance,
+    fused_detect_metrics,
+    merge_detect_partials,
+)
 from mhw3d_detection_spark.streaming import (
     streaming_dedup,
-    streaming_detect_events_exact,
-    streaming_event_sessions,
+    streaming_detect_partials,
     streaming_severity,
     streaming_windowed_stats,
 )
@@ -53,229 +60,162 @@ def run_stream(spark, src_df, path, build, name):
     return spark.table(name)
 
 
-def test_session_window_matches_batch_gap_join(spark, flagged_parquet):
-    path, df = flagged_parquet
-    got = run_stream(
-        spark,
-        df,
-        path,
-        lambda s: streaming_event_sessions(
-            s, max_gap_days=2, min_total_days=5, watermark="0 seconds"
-        ),
-        "sessions",
-    ).orderBy("cell_id", "date_start")
-    rows = got.collect()
-    # one merged event: days 0..12 (11 exceed days), the 17-18 run is
-    # too short for min_total_days=5
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.cell_id == 1
-    assert r.date_start == dt.date(2020, 1, 1)
-    assert r.date_end == dt.date(2020, 1, 13)
-    assert r.n_days == 11
+SEV_SCHEMA = "cell_id int, time timestamp, temp double, seas double, thresh double"
 
-    # batch twin on the same data (sessionize-then-filter semantics:
-    # min_duration=1 at the run stage, session-level total filter)
-    batch = (
-        detect_events(df, min_duration=1, max_gap=2)
-        .filter(F.col("duration") >= 0)
-        .collect()
+
+def _sev_rows(hot, days):
+    """Severity-joined daily rows of cell 1 from 2021-01-01: exceeding
+    (temp > thresh 12) on the ``hot`` days, with day-varying
+    intensities so every metric column tells the days apart."""
+    return [
+        (1, dt.datetime(2021, 1, 1) + dt.timedelta(days=d),
+         14.0 + 0.5 * (d % 5) if d in hot else 10.0 - 0.25 * (d % 3), 9.0, 12.0)
+        for d in days
+    ]
+
+
+def _stream_to_store(spark, tmp_path, files, schema=SEV_SCHEMA, score=None):
+    """Write ``files`` (row lists) in order and stream them through
+    ``streaming_detect_partials``, one file per micro-batch; returns
+    the partials store."""
+    src, store = str(tmp_path / "src"), str(tmp_path / "store")
+    for rows in files:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    stream = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    q = (
+        streaming_detect_partials(score(stream) if score else stream, store)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    batch_cell1 = [b for b in batch if b.cell_id == 1]
-    assert batch_cell1[0].date_start.date() == r.date_start
-    assert batch_cell1[0].date_end.date() == r.date_end
+    q.awaitTermination(120)
+    parts = spark.read.parquet(store)
+    assert parts.select("batch").distinct().count() == len(files)
+    return parts
 
 
-@pytest.fixture(scope="module")
-def tricky_parquet(spark, tmp_path_factory):
-    """Series where sessionize-then-filter DIVERGES from the batch
-    contract: short runs chained by small gaps (a session_window merges
-    them into one long session; the batch drops each run at W4)."""
-    rows = []
-    day0 = dt.datetime(2021, 1, 1)
-    # cell 1: three 3-day runs with 1-day gaps (days 0-2, 4-6, 8-10):
-    #   batch (min_duration=5): every run dropped -> no events
-    # then days 14-20 (7 days, qualifies) -> event 1
-    # then 2-day gap, days 23-27 (5 days, qualifies, gap<=2) -> merges
-    pattern = (
-        list(range(0, 3)) + list(range(4, 7)) + list(range(8, 11))
-        + list(range(14, 21)) + list(range(23, 28))
+def _events(df):
+    cols = sorted(df.columns)
+    return sorted(
+        (r.asDict() for r in df.select(*cols).collect()),
+        key=lambda r: (r["cell_id"], r["event_id"]),
     )
-    for d in range(40):
-        rows.append((1, day0 + dt.timedelta(days=d), d in pattern))
-    df = spark.createDataFrame(rows, "cell_id int, time timestamp, exceed boolean")
-    path = str(tmp_path_factory.mktemp("stream") / "tricky")
-    df.write.mode("overwrite").parquet(path)
-    return path, df
 
 
-def test_stateful_exact_matches_batch(spark, tricky_parquet):
-    path, df = tricky_parquet
-    got = run_stream(
-        spark,
-        df,
-        path,
-        lambda s: streaming_detect_events_exact(
-            s, min_duration=5, max_gap=2, watermark="0 seconds"
-        ),
-        "stateful_exact",
-    ).orderBy("cell_id", "event_id")
-    batch = (
-        detect_events(df, min_duration=5, max_gap=2)
-        .orderBy("cell_id", "event_id")
-        .collect()
+def _assert_same_events(want_df, got_df):
+    assert set(want_df.columns) == set(got_df.columns)
+    want, got = _events(want_df), _events(got_df)
+    assert len(got) == len(want), (want, got)
+    for ra, rb in zip(want, got):
+        for c, va in ra.items():
+            vb = rb[c]
+            if isinstance(va, float):
+                assert math.isclose(va, vb, rel_tol=1e-9, abs_tol=1e-9), (c, va, vb)
+            else:
+                assert va == vb, (c, va, vb)
+    return want
+
+
+def _store_matches_fused(spark, tmp_path, files, **kw):
+    """The store contract: the merged micro-batch partials equal the
+    fused whole-series tail on the union of the files."""
+    parts = _stream_to_store(spark, tmp_path, files)
+    union = spark.createDataFrame([r for f in files for r in f], SEV_SCHEMA)
+    return _assert_same_events(
+        fused_detect_metrics(enrich_series(exceedance(union)), **kw),
+        merge_detect_partials(parts, **kw),
     )
-    srows = got.collect()
-    assert len(batch) == 1  # the three short runs must NOT form events
-    assert len(srows) == len(batch)
-    for s, b in zip(srows, batch):
-        assert (s.cell_id, s.event_id) == (b.cell_id, b.event_id)
-        assert s.date_start == b.date_start.date()
-        assert s.date_end == b.date_end.date()
-        assert s.duration == b.duration
+
+
+def test_stateful_exact_matches_batch(spark, tmp_path):
+    # W4 before W5: three 3-day runs chained by 1-day gaps (days 0-2,
+    # 4-6, 8-10) each fail min_duration=5 BEFORE gap joining, so they
+    # form no event (a session window over the exceed days would chain
+    # them into one); days 14-20 and 23-27 qualify and join over the
+    # 2-day gap. The file cuts split the chained runs and the event.
+    hot = set(range(0, 3)) | set(range(4, 7)) | set(range(8, 11))
+    hot |= set(range(14, 21)) | set(range(23, 28))
+    files = [_sev_rows(hot, range(a, b)) for a, b in [(0, 5), (5, 17), (17, 40)]]
+    got = _store_matches_fused(spark, tmp_path, files, min_duration=5, max_gap=2)
+    assert [(e["date_start"].day, e["date_end"].day) for e in got] == [(15, 28)]
 
 
 def test_stateful_exact_across_microbatches(spark, tmp_path):
-    # an event split across TWO microbatches (maxFilesPerTrigger=1) must
-    # come out identical to the batch result: run/event state carries
-    # over the batch boundary and the final flush happens on timeout
-    day0 = dt.datetime(2022, 1, 1)
-    pattern = set(range(0, 9)) | set(range(11, 16))  # merges via 2-day gap
-    rows = [(1, day0 + dt.timedelta(days=d), d in pattern) for d in range(30)]
-    df = spark.createDataFrame(rows, "cell_id int, time timestamp, exceed boolean")
-    path = str(tmp_path / "multibatch")
-    # file 1: days 0..12 (event still open), file 2: the rest
-    df.filter(F.col("time") < day0 + dt.timedelta(days=13)).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-    df.filter(F.col("time") >= day0 + dt.timedelta(days=13)).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-
-    stream = spark.readStream.schema(df.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(path)
-    out = streaming_detect_events_exact(
-        stream, min_duration=5, max_gap=2, watermark="0 seconds"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("multibatch")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("multibatch").orderBy("event_id").collect()
-    batch = (
-        detect_events(df, min_duration=5, max_gap=2).orderBy("event_id").collect()
-    )
-    assert len(batch) == 1 and batch[0].duration == 16  # days 0..15 merged
-    assert len(got) == 1
-    assert got[0].date_start == batch[0].date_start.date()
-    assert got[0].date_end == batch[0].date_end.date()
-    assert got[0].duration == batch[0].duration
+    # an event split across micro-batches (days 0-8 and 11-15 join over
+    # a 2-day gap; the first file ends inside the gap) plus a later
+    # event: event ids number both in time order, as in the batch
+    hot = set(range(0, 9)) | set(range(11, 16)) | set(range(22, 29))
+    files = [_sev_rows(hot, range(0, 10)), _sev_rows(hot, range(10, 35))]
+    got = _store_matches_fused(spark, tmp_path, files, min_duration=5, max_gap=2)
+    assert [(e["event_id"], e["duration"]) for e in got] == [(1, 16), (2, 7)]
 
 
 def test_stateful_exact_out_of_order_across_batches(spark, tmp_path):
-    # a LATE day that PREPENDS an already-buffered run arrives in a
-    # later microbatch (within the watermark): day 4 is missing from
-    # file 1 (which carries days 5..9 of the run) and shows up in
-    # file 2. Batch semantics: days 4..9 are ONE 6-day run -> one event
-    # starting day 4. A frontier that only tracks [run_s, run_e] and
-    # skips d <= run_e as a duplicate would emit [5..9] instead.
-    day0 = dt.datetime(2023, 1, 1)
+    # a LATE day that PREPENDS an already-stored run: the first
+    # micro-batch holds days 5-9 of the run but not day 4, which
+    # arrives in the second. The whole series has ONE 6-day run from
+    # day 4, so the merge must re-join the late day to the run.
+    hot = set(range(4, 10)) | {11, 12, 13}
+    files = [
+        _sev_rows(hot, [d for d in range(10) if d != 4]),
+        _sev_rows(hot, [4] + list(range(10, 31))),
+    ]
+    got = _store_matches_fused(spark, tmp_path, files, min_duration=5, max_gap=2)
+    assert [(e["date_start"], e["duration"]) for e in got] == [
+        (dt.datetime(2021, 1, 5), 6)
+    ]
 
-    def row(d, ex):
-        return (1, day0 + dt.timedelta(days=d), ex)
 
-    f1 = [row(d, d in range(5, 10)) for d in range(10) if d != 4]
-    f2 = [row(4, True)] + [row(d, d in (11, 12, 13)) for d in range(10, 31)]
-    schema = "cell_id int, time timestamp, exceed boolean"
-    path = str(tmp_path / "outoforder")
-    spark.createDataFrame(f1, schema).coalesce(1).write.mode("overwrite").parquet(path)
-    spark.createDataFrame(f2, schema).coalesce(1).write.mode("append").parquet(path)
-
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(path)
-    out = streaming_detect_events_exact(
-        stream, min_duration=5, max_gap=2, watermark="7 days"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("outoforder")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("outoforder").orderBy("event_id").collect()
-    batch_df = spark.createDataFrame(f1 + f2, schema)
-    batch = (
-        detect_events(batch_df, min_duration=5, max_gap=2)
-        .orderBy("event_id")
-        .collect()
-    )
-    # one event, days 4..9 (the 11-13 run is below min_duration)
-    assert len(batch) == 1 and batch[0].duration == 6
-    assert len(got) == 1
-    assert got[0].date_start == batch[0].date_start.date() == dt.date(2023, 1, 5)
-    assert got[0].date_end == batch[0].date_end.date()
-    assert got[0].duration == batch[0].duration
+def test_partials_store_late_day_inside_earlier_run(spark, tmp_path):
+    # a late COLD day that lands inside what the first micro-batch saw
+    # as one run: the first file holds hot days 6-11 and 13-18 but not
+    # day 12. The whole series has two 6-day events around the cold
+    # day (max_gap=0 keeps them apart); without the first batch's
+    # calendar break at day 12 the store would hold one 12-day run.
+    hot = set(range(6, 12)) | set(range(13, 19))
+    files = [
+        _sev_rows(hot, [d for d in range(25) if d != 12]),
+        _sev_rows(hot, [12]),
+    ]
+    got = _store_matches_fused(spark, tmp_path, files, min_duration=5, max_gap=0)
+    assert [(e["date_start"].day, e["duration"]) for e in got] == [(7, 6), (14, 6)]
 
 
 def test_streaming_severity_into_stateful_detector(spark, tmp_path):
     # the full streaming MHW pipeline: raw temp stream -> stream-static
-    # broadcast join against a static clim (EP2 twin) -> exceed flag ->
-    # stateful exact detector; result must equal the batch chain on the
-    # same data
+    # broadcast join against a static clim (EP2 twin) -> run-partials
+    # store -> merge; equal to the batch chain on the same data
+    from mhw3d_detection_spark.operators.severity import calculate_severity
+
     day0 = dt.datetime(2020, 1, 1)
     rows = [
-        (1, day0 + dt.timedelta(days=d), 20.0 + (5.0 if 10 <= d <= 20 else 0.0))
+        (1, day0 + dt.timedelta(days=d),
+         20.0 + (5.0 + 0.25 * (d % 4) if 10 <= d <= 20 else 0.0))
         for d in range(60)
     ]
     schema = "cell_id int, time timestamp, temp double"
     df = spark.createDataFrame(rows, schema)
-    path = str(tmp_path / "sevstream")
-    df.coalesce(1).write.mode("overwrite").parquet(path)
     clim = spark.createDataFrame(
         [(1, doy, 20.0, 22.0) for doy in range(1, 367)],
         "cell_id int, doy int, seas double, thresh double",
     )
-
-    stream = spark.readStream.schema(schema).parquet(path)
-    scored = streaming_severity(stream, clim)
-    out = streaming_detect_events_exact(
-        scored, min_duration=5, max_gap=2, watermark="0 seconds"
+    parts = _stream_to_store(
+        spark, tmp_path, [rows[:15], rows[15:]], schema,
+        score=lambda s: streaming_severity(s, clim),
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sevstream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("sevstream").orderBy("event_id").collect()
-
-    from mhw3d_detection_spark.operators.severity import calculate_severity
-    from mhw3d_detection_spark.operators.detection import exceedance
-
-    batch = (
-        detect_events(
-            exceedance(calculate_severity(df, clim)),
+    got = _assert_same_events(
+        fused_detect_metrics(
+            enrich_series(exceedance(calculate_severity(df, clim))),
             min_duration=5,
             max_gap=2,
-        )
-        .orderBy("event_id")
-        .collect()
+        ),
+        merge_detect_partials(parts, min_duration=5, max_gap=2),
     )
-    assert len(batch) == 1 and batch[0].duration == 11
-    assert len(got) == 1
-    assert got[0].date_start == batch[0].date_start.date()
-    assert got[0].date_end == batch[0].date_end.date()
-    assert got[0].duration == batch[0].duration
+    assert [e["duration"] for e in got] == [11]
     # severity values flow through the stream projection too
     sev_rows = calculate_severity(df, clim).filter(F.col("severity") > 1).count()
     assert sev_rows == 11
@@ -385,76 +325,16 @@ def test_streaming_area_stats_matches_batch(spark, flagged_parquet):
 
 
 def test_streaming_partials_merge_matches_batch(spark, tmp_path):
-    # incremental-detection streaming twin: three time-slice files
-    # replayed one per micro-batch, each compressed to run partials via
-    # foreachBatch; merging the partials store must equal the batch
-    # fused pipeline on the whole series — including the event that
-    # spans the first file boundary.
-    import math
-
-    from mhw3d_detection_spark.operators.detection import (
-        enrich_series,
-        exceedance,
-        fused_detect_metrics,
-        merge_detect_partials,
-    )
-    from mhw3d_detection_spark.streaming import streaming_detect_partials
-
-    day0 = dt.datetime(2022, 1, 1)
+    # three time-slice files replayed one per micro-batch, each
+    # compressed to run partials via foreachBatch; merging the store
+    # must equal the batch fused pipeline on the whole series —
+    # including the event that spans the first file boundary
     hot = set(range(3, 12)) | set(range(14, 17)) | set(range(30, 33))
-    rows = [
-        (
-            1,
-            day0 + dt.timedelta(days=d),
-            14.0 if d in hot else 10.0,
-            9.0,
-            12.0,
-        )
-        for d in range(40)
-    ]
-    df = spark.createDataFrame(
-        rows, "cell_id int, time timestamp, temp double, seas double, thresh double"
-    )
-    src = str(tmp_path / "sev_stream")
-    for lo, hi in [(0, 10), (10, 25), (25, 40)]:  # file 1 cuts run 3..11
-        df.filter(
-            (F.col("time") >= day0 + dt.timedelta(days=lo))
-            & (F.col("time") < day0 + dt.timedelta(days=hi))
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    store = str(tmp_path / "partials_store")
-    stream = spark.readStream.schema(df.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    q = (
-        streaming_detect_partials(stream, store)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    merged = merge_detect_partials(
-        spark.read.parquet(store), min_duration=5, max_gap=2
-    )
-    whole = fused_detect_metrics(
-        enrich_series(exceedance(df)), min_duration=5, max_gap=2
-    )
-    cols = sorted(whole.columns)
-    assert set(merged.columns) == set(whole.columns)
-    a = sorted(whole.select(*cols).collect(), key=lambda r: r["event_id"])
-    b = sorted(merged.select(*cols).collect(), key=lambda r: r["event_id"])
+    files = [_sev_rows(hot, range(a, b)) for a, b in [(0, 10), (10, 25), (25, 40)]]
+    got = _store_matches_fused(spark, tmp_path, files, min_duration=5, max_gap=2)
     # one event, days 3..11: the 3-day run 14..16 fails min_duration=5
     # BEFORE gap joining (the frozen W4-before-W5 contract), so no merge
-    assert len(a) == len(b) == 1
-    assert a[0]["duration"] == 9
-    for ra, rb in zip(a, b):
-        for c in cols:
-            va, vb = ra[c], rb[c]
-            if isinstance(va, float):
-                assert math.isclose(va, vb, rel_tol=1e-9, abs_tol=1e-9), (c, va, vb)
-            else:
-                assert va == vb, (c, va, vb)
+    assert [e["duration"] for e in got] == [9]
 
 
 def test_streaming_e2e_harness_two_cells_ooo(spark, tmp_path):
