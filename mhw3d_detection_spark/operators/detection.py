@@ -23,15 +23,19 @@ iterative gap-merge loop:
        equivalent because merging is chain-transitive (A-B merge never
        *increases* the B-C gap).
 4. A5/W6/W7  metrics (:func:`fused_detect_metrics`): each run carries
-       mergeable metric partials, and one ``groupBy(cell, event)``
-       merges an event's member runs. Every per-event metric, in the
-       pipeline and in the component queries alike, is a readout of
-       these run partials. State that spans runs — the common moment
-       center, the rate formulas' neighbor values, the series extent —
-       is derived on the runs table (:func:`_recenter`,
-       :func:`_run_boundaries`), once for the whole-series tail and the
-       incremental merge alike; the series itself carries only the W3
-       window.
+       mergeable metric partials (:func:`_run_partials`, one fixed
+       schema), and one ``groupBy(cell, event)`` merges an event's
+       member runs by the one merge rule (:func:`_merge_partials`,
+       which the incremental merge's run coalescing shares). Every
+       per-event metric, in the pipeline and in the component queries
+       alike, is a readout of these merged partials, and every metric
+       column is always defined: a reader selects what it needs and
+       column pruning drops the partials nothing selected reads. State
+       that spans runs — the common moment center, the rate formulas'
+       neighbor values, the series extent — is derived on the runs
+       table (:func:`_recenter`, :func:`_run_boundaries`), once for the
+       whole-series tail and the incremental merge alike; the series
+       itself carries only the W3 window.
 
 Shuffle budget of the production flow: ONE hash exchange of the series
 on ``cell_id`` (the W3 window). The (cell, run) partial aggregate, the
@@ -54,7 +58,6 @@ def exceedance(
     temp_col: str = "temp",
     seas_col: str = "seas",
     thresh_col: str = "thresh",
-    fill_missing: bool = True,
 ) -> DataFrame:
     """Boolean exceedance series (reference: marineHeatWaves.py:303-317).
 
@@ -62,9 +65,7 @@ def exceedance(
     terminate events) and a ``was_missing`` flag is kept; exceedance is
     strictly ``temp > thresh`` with NULL -> false.
     """
-    temp = F.col(temp_col)
-    if fill_missing:
-        temp = F.coalesce(temp, F.col(seas_col))
+    temp = F.coalesce(F.col(temp_col), F.col(seas_col))
     return ts_sev.withColumns(
         {
             "was_missing": F.col(temp_col).isNull(),
@@ -304,15 +305,16 @@ def fused_detect_metrics(
     min_duration: int = 5,
     max_gap: int = 2,
     join_across_gaps: bool = True,
-    with_rates: bool = True,
-    with_categories: bool = True,
 ) -> DataFrame:
     """Detection + per-event metrics in ONE pass over the series: the
     production tail of :func:`~mhw3d_detection_spark.plans.detect_mhw`.
 
     Also the one metrics implementation behind every component query
     (peaks, intensities, rates, categories, block averages, ranks):
-    those rows read their columns off this output. The big table is
+    those rows read their columns off this output. Every metric column
+    is always defined; a reader selects the columns it needs, and
+    Catalyst's column pruning drops every partial, window and aggregate
+    that only the unselected columns read. The big table is
     touched exactly once: a per-(cell, run) aggregate computes
     *mergeable partials* for every metric — sums / counts /
     sums-of-squares for the mean/var family,
@@ -345,6 +347,13 @@ def fused_detect_metrics(
     values, series extent) comes from the same runs-level helper the
     incremental merge uses (:func:`_run_boundaries`).
 
+    ``category`` is refused, not guessed, where the peak's band is
+    below 1: a ``thresh == seas`` day with ``temp == thresh`` inside
+    the event has ``rel_thresh_norm`` NaN (0 * inf), which Spark's
+    ``max`` ranks above +inf (the reference and the NumPy oracle fail
+    there too). Reading it raises, naming the cell and the event start;
+    every other column still answers.
+
     Scale shape: hashpartitioning(cell) from the enrich window
     satisfies the (cell, run) aggregate, the windows over each cell's
     runs and the (cell, event) merge, so the whole tail after the
@@ -353,25 +362,18 @@ def fused_detect_metrics(
     never cached — a cached plan skips AQE partition coalescing, so it
     and every re-scan would run at the full initial partition count.
     """
-    p = _run_partials(
-        enriched,
-        cell_col=cell_col,
-        time_col=time_col,
-        with_rates=with_rates,
-        with_categories=with_categories,
-    )
     return _metrics_from_partials(
-        _run_boundaries(p, with_rates=with_rates),
+        _run_partials(enriched, cell_col=cell_col, time_col=time_col),
         cell_col=cell_col,
         min_duration=min_duration,
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
-        with_rates=with_rates,
-        with_categories=with_categories,
     )
 
 
 _MOMENTS = ("rs", "rt", "ab")  # rel_seas, rel_thresh, t_abs
+#: category-band day counters, in CATEGORIES order
+_BANDS = ("d_mod", "d_str", "d_sev", "d_ext")
 
 
 def _run_partials(
@@ -379,17 +381,14 @@ def _run_partials(
     *,
     cell_col: str = "cell_id",
     time_col: str = "time",
-    with_rates: bool = True,
-    with_categories: bool = True,
 ) -> DataFrame:
     """The per-(cell, run) mergeable-partial aggregate behind
     :func:`fused_detect_metrics` and :func:`detect_partials` — ONE
-    grouped pass over the enriched series producing, per run,
-    everything any per-event metric needs: moment partials, argmax peak
-    structs, category-day counters and (with_rates) the run's first and
-    last rel_seas. The output rows are associative state: same-flag
-    time-adjacent runs merge by summing/maxing partials (see
-    :func:`merge_detect_partials`).
+    grouped pass over the enriched series producing, per run, every
+    partial any per-event metric reads: moment partials, argmax peak
+    structs, category-day counters and the run's first and last
+    rel_seas. One fixed schema; the rows are associative state that
+    :func:`_merge_partials` merges.
 
     Moment partials ``(n, s, q, c)``: count, sum and sum of squares of
     deviations from the center ``c``. Each run centers on its own mean
@@ -397,11 +396,10 @@ def _run_partials(
     centering window; :func:`_recenter` gives runs a common center."""
     day = F.to_date(time_col)
     tb = -F.unix_date(day)  # earliest-day tie-break under max()
-    rs = F.col("rel_seas")
-    rt = F.col("rel_thresh")
-    rtn = F.col("rel_thresh_norm")
-    ab = F.col("t_abs")
+    rs, rt, rtn, ab = map(F.col, ("rel_seas", "rel_thresh", "rel_thresh_norm", "t_abs"))
     cat_band = F.floor(F.lit(1.0) + rtn)
+    pk_order = F.struct(rs.alias("v"), tb.alias("tb"))
+    pkc_order = F.struct(rtn.alias("v"), tb.alias("tb"))
 
     aggs = [
         F.first("__flag").alias("flag"),
@@ -418,35 +416,55 @@ def _run_partials(
             (F.var_pop(x) * F.count(x)).alias(f"q_{m}"),
             F.avg(x).alias(f"c_{m}"),
         ]
+    hits = (cat_band == 1, cat_band == 2, cat_band == 3, cat_band >= 4)
     aggs += [
         # W6 peak partials: ordering key + payload at the key's argmax
-        F.max(F.struct(rs.alias("v"), tb.alias("tb"))).alias("pk_key"),
+        F.max(pk_order).alias("pk_key"),
         F.max_by(
-            F.struct(
-                day.alias("date_peak"), rt.alias("rt"), ab.alias("ab")
-            ),
-            F.struct(rs.alias("v"), tb.alias("tb")),
+            F.struct(day.alias("date_peak"), rt.alias("rt"), ab.alias("ab")),
+            pk_order,
         ).alias("pk_val"),
+        F.max(pkc_order).alias("pkc_key"),
+        F.max_by(cat_band, pkc_order).alias("pkc_val"),
+        *(F.sum(h.cast("long")).alias(d) for d, h in zip(_BANDS, hits)),
+        F.min_by(rs, F.col(time_col)).alias("first_rs"),
+        F.max_by(rs, F.col(time_col)).alias("last_rs"),
     ]
-    if with_categories:
-        aggs += [
-            F.max(F.struct(rtn.alias("v"), tb.alias("tb"))).alias("pkc_key"),
-            F.max_by(cat_band, F.struct(rtn.alias("v"), tb.alias("tb"))).alias(
-                "pkc_val"
-            ),
-            F.sum((cat_band == 1).cast("long")).alias("d_mod"),
-            F.sum((cat_band == 2).cast("long")).alias("d_str"),
-            F.sum((cat_band == 3).cast("long")).alias("d_sev"),
-            F.sum((cat_band >= 4).cast("long")).alias("d_ext"),
-        ]
-    if with_rates:
-        aggs += [
-            F.min_by(rs, F.col(time_col)).alias("first_rs"),
-            F.max_by(rs, F.col(time_col)).alias("last_rs"),
-        ]
     return enriched.groupBy(
         F.col(cell_col).alias("cell_id"), F.col("__run").alias("__run")
     ).agg(*aggs)
+
+
+def _merge_partials() -> list[Column]:
+    """The one merge rule of the run partials, column by column: the
+    aggregate list of both :func:`merge_detect_partials`' run
+    coalescing and the per-event ``groupBy(cell, event)``. Over runs
+    whose moments share one center (:func:`_recenter`) it yields the
+    partials of their union under the same names: min/max of the run
+    span and the sum of run days; sums of ``n``/``s``/``q`` and the
+    shared ``c``; the max of each peak's ordering key and the payload at
+    it; sums of the band-day counters; the rel_seas of the earliest
+    first and the latest last day. Every partial column is required: a
+    table missing one fails analysis naming it."""
+    aggs = [
+        F.first("flag").alias("flag"),
+        F.min("run_start").alias("run_start"),
+        F.max("run_end").alias("run_end"),
+        F.sum("run_days").alias("run_days"),
+    ]
+    for m in _MOMENTS:
+        aggs += [F.sum(f"{p}_{m}").alias(f"{p}_{m}") for p in "nsq"]
+        aggs.append(F.first(f"c_{m}").alias(f"c_{m}"))
+    for k in ("pk", "pkc"):
+        aggs += [
+            F.max(f"{k}_key").alias(f"{k}_key"),
+            F.max_by(f"{k}_val", f"{k}_key").alias(f"{k}_val"),
+        ]
+    return aggs + [
+        *(F.sum(d).alias(d) for d in _BANDS),
+        F.min_by("first_rs", "run_start").alias("first_rs"),
+        F.max_by("last_rs", "run_end").alias("last_rs"),
+    ]
 
 
 def _recenter(runs: DataFrame, group: str) -> DataFrame:
@@ -490,14 +508,12 @@ def _recenter(runs: DataFrame, group: str) -> DataFrame:
     )
 
 
-def _run_boundaries(runs: DataFrame, *, with_rates: bool) -> DataFrame:
+def _run_boundaries(runs: DataFrame) -> DataFrame:
     """The W7 rate formulas' cross-run state on the runs table (``__run``
     increasing in time): a run's previous day IS the previous run's last
     day, so ``before_rs`` = lag of ``last_rs``, ``after_rs`` = lead of
     ``first_rs`` (NULL at the series edges), and the series extent is
     min/max over the cell's runs. Shared by both tails."""
-    if not with_rates:
-        return runs
     w = Window.partitionBy("cell_id").orderBy("__run")
     wall = Window.partitionBy("cell_id")
     return runs.withColumns(
@@ -517,121 +533,100 @@ def _metrics_from_partials(
     min_duration: int = 5,
     max_gap: int = 2,
     join_across_gaps: bool = True,
-    with_rates: bool = True,
-    with_categories: bool = True,
 ) -> DataFrame:
-    """Event assembly + metric merge over a run-partials table
-    (:func:`_run_partials` output, normalized to a ``cell_id`` column):
-    W4 min-duration filter, W5 gap joining and the per-event merge of
-    every member run's partials (moments re-centered per event,
-    :func:`_recenter`), then the category/rate tail."""
-
-    def merged_std(n, s, q2):
-        n, s, q2 = F.sum(n), F.sum(s), F.sum(q2)
-        nd = n.cast("double")
-        return F.when(
-            n > 0,
-            F.sqrt(F.greatest(q2 / nd - (s / nd) * (s / nd), F.lit(0.0))),
-        )
-
-    def mean_of(n, s, c):
-        # centered partials: mean = center + sum(x - c) / count
-        return F.first(c) + F.sum(s) / F.sum(n)
-
-    def cum_of(n, s, c):
-        # sum(x) = sum(x - c) + c * count; all-null events stay NULL
-        # (sum of no non-null partials is NULL, + c*0 propagates it)
-        return F.sum(s) + F.first(c) * F.sum(n)
-
-    m_aggs = [
-        F.max("pk_key").alias("__pk_key"),
-        F.max_by("pk_val", "pk_key").alias("__pk_val"),
-        mean_of("n_rs", "s_rs", "c_rs").alias("intensity_mean"),
-        merged_std("n_rs", "s_rs", "q_rs").alias("intensity_var"),
-        cum_of("n_rs", "s_rs", "c_rs").alias("intensity_cumulative"),
-        mean_of("n_rt", "s_rt", "c_rt").alias("intensity_mean_relThresh"),
-        merged_std("n_rt", "s_rt", "q_rt").alias("intensity_var_relThresh"),
-        cum_of("n_rt", "s_rt", "c_rt").alias("intensity_cumulative_relThresh"),
-        mean_of("n_ab", "s_ab", "c_ab").alias("intensity_mean_abs"),
-        merged_std("n_ab", "s_ab", "q_ab").alias("intensity_var_abs"),
-        cum_of("n_ab", "s_ab", "c_ab").alias("intensity_cumulative_abs"),
-    ]
-    if with_categories:
-        m_aggs += [
-            F.max_by("pkc_val", "pkc_key").alias("__pkc_val"),
-            F.sum("d_mod").alias("duration_moderate"),
-            F.sum("d_str").alias("duration_strong"),
-            F.sum("d_sev").alias("duration_severe"),
-            F.sum("d_ext").alias("duration_extreme"),
-        ]
-    if with_rates:
-        m_aggs += [
-            F.min_by("first_rs", "run_start").alias("__first_rel_seas"),
-            F.max_by("last_rs", "run_end").alias("__last_rel_seas"),
-            F.min_by("before_rs", "run_start").alias("__before_rel_seas"),
-            F.max_by("after_rs", "run_end").alias("__after_rel_seas"),
-            F.min_by(
-                F.col("run_start") == F.col("series_start"), "run_start"
-            ).alias("__starts_at_series_start"),
-            F.max_by(
-                F.col("run_end") == F.col("series_end"), "run_end"
-            ).alias("__ends_at_series_end"),
-        ]
-
+    """Event assembly + metric readout over a run-partials table
+    (:func:`_run_partials` schema, normalized to a ``cell_id`` column):
+    the cross-run state (:func:`_run_boundaries`), W4 min-duration
+    filter, W5 gap joining, the per-event merge of every member run's
+    partials (:func:`_merge_partials`, moments re-centered per event by
+    :func:`_recenter`), then ONE projection reads every metric off the
+    merged partials."""
     members = _event_members(
-        p,
+        _run_boundaries(p),
         qualifies=F.col("flag") & (F.col("run_days") >= min_duration),
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
     )
-    g = _events(_recenter(members, "__evt"), aggs=tuple(m_aggs))
+    # the rate formulas' cross-run state: the days before the event's
+    # first day and after its last, and the series extent
+    edges = (
+        F.min_by("before_rs", "run_start").alias("before_rs"),
+        F.max_by("after_rs", "run_end").alias("after_rs"),
+        F.min("series_start").alias("series_start"),
+        F.max("series_end").alias("series_end"),
+    )
+    g = _events(_recenter(members, "__evt"), aggs=(*_merge_partials(), *edges))
 
-    imax = F.col("__pk_key.v")
-    tt = F.datediff(F.col("__pk_val.date_peak"), F.to_date("date_start"))
-    readout = {
-        "intensity_max": imax,
-        "date_peak": F.col("__pk_val.date_peak"),
-        "intensity_max_relThresh": F.col("__pk_val.rt"),
-        "intensity_max_abs": F.col("__pk_val.ab"),
-    }
-    # S6 category readout + W7 onset/decline rate formulas
-    # (marineHeatWaves.py:385-411: half-day boundary convention, 4 edge
-    # cases at the series extremes)
-    if with_categories:
-        readout["category"] = F.element_at(
-            F.array(*[F.lit(c) for c in CATEGORIES]),
-            F.least(F.col("__pkc_val"), F.lit(4)).cast("int"),
-        )
-    if with_rates:
-        tt_peak = tt.cast("double")
-        dur = F.col("duration").cast("double")
-        onset = (
-            F.when(
-                ~F.col("__starts_at_series_start"),
-                (imax - 0.5 * (F.col("__first_rel_seas") + F.col("__before_rel_seas")))
-                / (tt_peak + 0.5),
+    readout = {}
+    for m, sfx in zip(_MOMENTS, ("", "_relThresh", "_abs")):
+        n, s, q, c = (F.col(f"{x}_{m}") for x in "nsqc")
+        nd = n.cast("double")
+        # centered partials: mean = c + sum(x - c) / count and
+        # sum(x) = sum(x - c) + c * count; an all-null event has s NULL
+        readout |= {
+            f"intensity_mean{sfx}": c + s / n,
+            f"intensity_var{sfx}": F.when(
+                n > 0, F.sqrt(F.greatest(q / nd - (s / nd) * (s / nd), F.lit(0.0)))
+            ),
+            f"intensity_cumulative{sfx}": s + c * n,
+        }
+    readout |= {f"duration_{c.lower()}": F.col(d) for c, d in zip(CATEGORIES, _BANDS)}
+
+    imax = F.col("pk_key.v")
+    # S6 category readout: refused where the peak's band is below 1
+    band = F.least(F.col("pkc_val"), F.lit(4))
+    category = F.when(
+        band < 1,
+        F.raise_error(
+            F.format_string(
+                "detect: cell %s, event starting %s has no category: the "
+                "peak's rel_thresh_norm (temp - thresh) / (thresh - seas) "
+                "is NaN or negative",
+                F.col("cell_id"),
+                F.col("date_start").cast("string"),
             )
-            .when(tt == 0, F.lit(0.0))  # peak==first -> 0
-            .otherwise((imax - F.col("__first_rel_seas")) / tt_peak)
-        )
-        decline_days = dur - 1 - tt_peak
-        decline = (
-            F.when(
-                ~F.col("__ends_at_series_end"),
-                (imax - 0.5 * (F.col("__last_rel_seas") + F.col("__after_rel_seas")))
-                / (decline_days + 0.5),
-            )
-            .when(tt == F.col("duration") - 1, F.lit(0.0))
-            .otherwise((imax - F.col("__last_rel_seas")) / decline_days)
-        )
-        readout.update({"rate_onset": onset, "rate_decline": decline})
-    # one projection: event columns, the readouts, no internal columns
-    return g.select(
-        *(
-            F.col(c).alias(cell_col) if c == "cell_id" else c
-            for c in g.columns
-            if not c.startswith("__")
         ),
+    ).otherwise(
+        F.element_at(F.array(*[F.lit(c) for c in CATEGORIES]), band.cast("int"))
+    )
+    # W7 onset/decline rate formulas (marineHeatWaves.py:385-411:
+    # half-day boundary convention, 4 edge cases at the series extremes)
+    tt = F.datediff(F.col("pk_val.date_peak"), F.to_date("date_start"))
+    tt_peak = tt.cast("double")
+    dur = F.col("duration").cast("double")
+    first, last = F.col("first_rs"), F.col("last_rs")
+    onset = (
+        F.when(
+            F.col("date_start") != F.col("series_start"),
+            (imax - 0.5 * (first + F.col("before_rs"))) / (tt_peak + 0.5),
+        )
+        .when(tt == 0, F.lit(0.0))  # peak==first -> 0
+        .otherwise((imax - first) / tt_peak)
+    )
+    decline_days = dur - 1 - tt_peak
+    decline = (
+        F.when(
+            F.col("date_end") != F.col("series_end"),
+            (imax - 0.5 * (last + F.col("after_rs"))) / (decline_days + 0.5),
+        )
+        .when(tt == F.col("duration") - 1, F.lit(0.0))
+        .otherwise((imax - last) / decline_days)
+    )
+    readout |= {
+        "intensity_max": imax,
+        "date_peak": F.col("pk_val.date_peak"),
+        "intensity_max_relThresh": F.col("pk_val.rt"),
+        "intensity_max_abs": F.col("pk_val.ab"),
+        "category": category,
+        "rate_onset": onset,
+        "rate_decline": decline,
+    }
+    return g.select(
+        F.col("cell_id").alias(cell_col),
+        "event_id",
+        "date_start",
+        "date_end",
+        "duration",
         *(v.alias(k) for k, v in readout.items()),
     )
 
@@ -644,8 +639,6 @@ def detect_partials(
     temp_col: str = "temp",
     seas_col: str = "seas",
     thresh_col: str = "thresh",
-    with_rates: bool = True,
-    with_categories: bool = True,
 ) -> DataFrame:
     """Incremental detection, map side: compress ONE batch of a
     severity-joined series (cell, time, temp, seas, thresh) into
@@ -655,7 +648,8 @@ def detect_partials(
     relationally).
 
     Each output row is one run (exceeding or not) of the batch carrying
-    associative state (:func:`_run_partials`); cross-run state, which
+    every partial column (:func:`_run_partials`, one fixed schema);
+    cross-run state, which
     a batch cannot see, is derived by the merge. A batch's runs also
     end wherever the batch holds no row for a day (a calendar break),
     so a run never spans a day the batch lacks: another batch's rows
@@ -667,7 +661,8 @@ def detect_partials(
     union of all batches' partials to :func:`merge_detect_partials`;
     the result equals the whole-series :func:`fused_detect_metrics`
     output up to floating-point reassociation in the re-centered
-    moments (~1e-12 relative; all other columns exactly).
+    moments (~1e-12 relative; all other columns exactly). A store must
+    keep every partial column, whichever metrics its readers select.
 
     At 100 TB this is the shape that avoids ever holding the full
     series in one job: per-batch partials are a tiny table per chunk,
@@ -685,13 +680,7 @@ def detect_partials(
         "exceed",
         calendar_breaks=True,
     )
-    return _run_partials(
-        enriched,
-        cell_col=cell_col,
-        time_col=time_col,
-        with_rates=with_rates,
-        with_categories=with_categories,
-    )
+    return _run_partials(enriched, cell_col=cell_col, time_col=time_col)
 
 
 def merge_detect_partials(
@@ -701,20 +690,20 @@ def merge_detect_partials(
     min_duration: int = 5,
     max_gap: int = 2,
     join_across_gaps: bool = True,
-    with_rates: bool = True,
-    with_categories: bool = True,
 ) -> DataFrame:
     """Incremental detection, reduce side: union of per-batch
-    :func:`detect_partials` rows -> the whole-series event metrics.
+    :func:`detect_partials` rows -> the whole-series event metrics, the
+    same columns as :func:`fused_detect_metrics`, every one defined.
 
     Runs-sized steps (the series itself never reappears):
 
     1. Coalesce runs across batches: order each cell's runs by
        run_start and merge consecutive SAME-FLAG runs (the whole-series
        RLE is row-based, so flag runs that only a batch boundary or a
-       calendar break separates are one run), their moments first
-       re-centered on one center (:func:`_recenter`, which the event
-       merge shares). Because no batch's run spans a day it lacks, the
+       calendar break separates are one run) by the one merge rule
+       (:func:`_merge_partials`), their moments first re-centered on one
+       center (:func:`_recenter`); the event merge shares both. Because
+       no batch's run spans a day it lacks, the
        run_start order interleaves every batch's runs exactly as the
        whole series orders its rows. A run that starts on or before
        the previous run's end means two batches hold one (cell, day):
@@ -726,6 +715,9 @@ def merge_detect_partials(
        standard event assembly + metric merge
        (:func:`_metrics_from_partials`).
 
+    The store must hold every partial column :func:`detect_partials`
+    writes; one missing fails analysis with an ``AnalysisException``
+    naming it, even when no selected metric reads it.
     A store whose writer did not break runs at calendar gaps still
     merges exactly when its batches are time slices (same schema).
     Extra batch columns (older stores' batch-local boundary columns, a
@@ -745,43 +737,15 @@ def merge_detect_partials(
             )
         ),
     ).otherwise(_run_ids(F.col("flag"), w))
-    g = _recenter(partials.withColumn("__g", g), "__g")
-    merge_aggs = [
-        F.first("flag").alias("flag"),
-        F.min("run_start").alias("run_start"),
-        F.max("run_end").alias("run_end"),
-        F.sum("run_days").alias("run_days"),
-    ]
-    for m in _MOMENTS:
-        merge_aggs += [
-            F.sum(f"n_{m}").alias(f"n_{m}"),
-            F.sum(f"s_{m}").alias(f"s_{m}"),
-            F.sum(f"q_{m}").alias(f"q_{m}"),
-            F.first(f"c_{m}").alias(f"c_{m}"),
-        ]
-    merge_aggs += [
-        F.max("pk_key").alias("pk_key"),
-        F.max_by("pk_val", "pk_key").alias("pk_val"),
-    ]
-    if with_categories:
-        merge_aggs += [
-            F.max("pkc_key").alias("pkc_key"),
-            F.max_by("pkc_val", "pkc_key").alias("pkc_val"),
-            F.sum("d_mod").alias("d_mod"), F.sum("d_str").alias("d_str"),
-            F.sum("d_sev").alias("d_sev"), F.sum("d_ext").alias("d_ext"),
-        ]
-    if with_rates:
-        merge_aggs += [
-            F.min_by("first_rs", "run_start").alias("first_rs"),
-            F.max_by("last_rs", "run_end").alias("last_rs"),
-        ]
-    runs = g.groupBy("cell_id", F.col("__g").alias("__run")).agg(*merge_aggs)
+    runs = (
+        _recenter(partials.withColumn("__g", g), "__g")
+        .groupBy("cell_id", F.col("__g").alias("__run"))
+        .agg(*_merge_partials())
+    )
     return _metrics_from_partials(
-        _run_boundaries(runs, with_rates=with_rates),
+        runs,
         cell_col=cell_col,
         min_duration=min_duration,
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
-        with_rates=with_rates,
-        with_categories=with_categories,
     )

@@ -45,8 +45,6 @@ def detect_mhw(
     join_across_gaps: bool = True,
     cold_spells: bool = False,
     clim_ts: DataFrame | None = None,
-    with_rates: bool = True,
-    with_categories: bool = True,
     pool_mode: str = "series",
 ) -> DataFrame:
     """Full MHW detection: long-format series -> per-event metrics table.
@@ -61,6 +59,14 @@ def detect_mhw(
     clim_ts, if given, supplies an *alternate* series to build the
     climatology from (marineHeatWaves.py:107-113) — free in relational
     form: clim built from table B, joined to table A.
+
+    Every metric column is always defined. Select the columns you need:
+    column pruning drops the partials, windows and aggregates that only
+    the other columns read, so a narrow reader pays for nothing more.
+    Reading ``category`` raises, naming the cell and the event start,
+    where the event's peak normalized exceedance is NaN (a ``thresh ==
+    seas`` day with ``temp == thresh`` inside the event); the other
+    columns still answer.
     """
     sign = -1.0 if cold_spells else 1.0
 
@@ -111,8 +117,6 @@ def detect_mhw(
         min_duration=min_duration,
         max_gap=max_gap,
         join_across_gaps=join_across_gaps,
-        with_rates=with_rates,
-        with_categories=with_categories,
     )
     if cold_spells:
         # Negate every intensity metric; durations/dates/rates keep sign

@@ -126,15 +126,12 @@ def _events(spark, sf_dir):
     )
 
 
-def _metrics(fl, *, with_rates=False, with_categories=False):
+def _metrics(fl):
     """Per-event metrics of a flagged series, read off its run partials
-    — the same :func:`fused_detect_metrics` readout the pipeline runs."""
+    — the same :func:`fused_detect_metrics` readout the pipeline runs;
+    each row selects its columns and column pruning drops the rest."""
     return fused_detect_metrics(
-        enrich_series(fl),
-        min_duration=MIN_DUR,
-        max_gap=MAX_GAP,
-        with_rates=with_rates,
-        with_categories=with_categories,
+        enrich_series(fl), min_duration=MIN_DUR, max_gap=MAX_GAP
     )
 
 
@@ -337,7 +334,7 @@ def q_onset_decline_rates(spark, sf_dir):
     branch yields 0/0 -> NaN unless the event spans the whole series; this
     engine returns 0.0 for every peak-at-edge case (the symmetric onset
     convention)."""
-    m = _metrics(_flagged(spark, sf_dir), with_rates=True)
+    m = _metrics(_flagged(spark, sf_dir))
     return m.select(
         "cell_id",
         "event_id",
@@ -373,7 +370,7 @@ def q_event_categories(spark, sf_dir):
     *normalized-exceedance* peak (separate argmax from the rel-seas
     peak); duration_<cat> counts member days in each band
     (reference marineHeatWaves.py:384-392)."""
-    m = _metrics(_flagged(spark, sf_dir), with_categories=True)
+    m = _metrics(_flagged(spark, sf_dir))
     return m.select(
         "cell_id",
         "event_id",
@@ -897,8 +894,6 @@ def q_mhw_pipeline(spark, sf_dir):
         smooth_mode="valid",  # M3 Ly variant: compressed-circular map smooth
         min_duration=MIN_DUR,
         max_gap=MAX_GAP,
-        with_rates=True,
-        with_categories=True,
         pool_mode="grid",  # windowless legacy-grid pooling: scale path
     )
     return _pipeline_select(m)
@@ -921,8 +916,6 @@ def q_mhw_pipeline_dense(spark, sf_dir):
         smooth_mode="full",  # arrays path (the default plan)
         min_duration=MIN_DUR,
         max_gap=MAX_GAP,
-        with_rates=True,
-        with_categories=True,
         pool_mode="grid",
     )
     return _pipeline_select(m)
@@ -969,8 +962,6 @@ def q_mhw_pipeline_series(spark, sf_dir):
         baseline=(1995, 2000),
         min_duration=MIN_DUR,
         max_gap=MAX_GAP,
-        with_rates=True,
-        with_categories=True,
         pool_mode="series",
     )
     return _pipeline_select(m)
@@ -1050,8 +1041,6 @@ def q_mhw_pipeline_detrended(spark, sf_dir):
         smooth_mode="full",
         min_duration=MIN_DUR,
         max_gap=MAX_GAP,
-        with_rates=True,
-        with_categories=True,
         pool_mode="grid",
     )
     return _pipeline_select(m)
@@ -1094,8 +1083,6 @@ def q_cold_spells(spark, sf_dir):
         min_duration=MIN_DUR,
         max_gap=MAX_GAP,
         cold_spells=True,
-        with_rates=False,
-        with_categories=False,
         pool_mode="grid",
     )
     return m.select(

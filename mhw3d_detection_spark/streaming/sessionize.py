@@ -70,31 +70,23 @@ def streaming_severity(
     mode: str = "legacy",
 ) -> DataFrame:
     """EP2 streaming twin: score a live sample stream against a STATIC
-    climatology — the stream-static broadcast join (each micro-batch
-    joins the dim table; no streaming state at all). The projection
-    reuses the exact batch severity kernels (``functions.scalar``),
-    same ``mode`` default as ``calculate_severity`` — i.e. this is the
-    operator that turns a raw sensor stream into the input of
-    :func:`streaming_detect_partials` (which derives its own
+    climatology — :func:`~mhw3d_detection_spark.operators.severity.calculate_severity`
+    itself, as a stream-static join (each micro-batch joins the dim
+    table; no streaming state at all), with the same ``mode`` default.
+    This is the operator that turns a raw sensor stream into the input
+    of :func:`streaming_detect_partials` (which derives its own
     exceedance flag).
     """
-    from mhw3d_detection_spark.functions.calendar import clim_doy
-    from mhw3d_detection_spark.functions.scalar import (
-        severity_best_practice,
-        severity_legacy,
-    )
+    from mhw3d_detection_spark.operators.severity import calculate_severity
 
-    joined = stream.withColumn("doy", clim_doy(F.col(time_col))).join(
-        F.broadcast(clim), [cell_col, "doy"], "left"
+    return calculate_severity(
+        stream,
+        clim,
+        cell_col=cell_col,
+        time_col=time_col,
+        temp_col=temp_col,
+        mode=mode,
     )
-    t_anom = F.col(temp_col) - F.col("seas")
-    if mode == "legacy":
-        sev = severity_legacy(t_anom, F.col("thresh"), F.col("seas"))
-    elif mode == "best_practice":
-        sev = severity_best_practice(t_anom, F.col("thresh"), F.col("seas"))
-    else:
-        raise ValueError(f"unknown severity mode {mode!r}")
-    return joined.withColumns({"t_anom": t_anom, "severity": sev})
 
 
 def streaming_dedup(
@@ -548,8 +540,6 @@ def streaming_detect_partials(
     temp_col: str = "temp",
     seas_col: str = "seas",
     thresh_col: str = "thresh",
-    with_rates: bool = True,
-    with_categories: bool = True,
 ):
     """The one streaming MHW detector: every micro-batch of a
     severity-scored stream is compressed to mergeable run partials
@@ -569,9 +559,11 @@ def streaming_detect_partials(
     a 100 TB backfill + live tail. Each micro-batch OVERWRITES its own
     ``batch=<id>`` partition directory, so foreachBatch's at-least-once
     replays are idempotent — a re-run batch replaces its rows instead
-    of appending duplicates. The extra ``batch`` partition column is
-    inert downstream: the merge's run coalescing drops it at the first
-    aggregate.
+    of appending duplicates. Every batch writes every partial column,
+    and the store must keep them all: the merge refuses a store that
+    lacks one, whichever metrics its readers select. The extra
+    ``batch`` partition column is inert downstream: the merge's run
+    coalescing drops it at the first aggregate.
 
     CONTRACT: the micro-batches together hold each (cell, day) at most
     once; they may otherwise arrive in ANY order — late days, days
@@ -594,8 +586,6 @@ def streaming_detect_partials(
             temp_col=temp_col,
             seas_col=seas_col,
             thresh_col=thresh_col,
-            with_rates=with_rates,
-            with_categories=with_categories,
         ).write.mode("overwrite").parquet(f"{partials_path}/batch={batch_id}")
 
     return stream.writeStream.foreachBatch(sink)

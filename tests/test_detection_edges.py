@@ -372,3 +372,41 @@ def test_constant_baseline_thresh_equals_seas(spark):
             assert math.isclose(row[k], v, rel_tol=1e-8, abs_tol=1e-8), (k, row, e)
         else:
             assert row[k] == v, (k, row, e)
+
+
+def test_nan_peak_category_is_refused(spark):
+    # Two 6-day 18.0 spikes one 15.0 day apart on a constant 15.0
+    # baseline: thresh == seas, so the joined gap day (temp == thresh)
+    # has rel_thresh_norm 0 * inf = NaN, which Spark's max ranks above
+    # the spike days' +inf. The reference and the NumPy oracle fail on
+    # that peak too: reading `category` raises, naming the cell, the
+    # event start and the cause; every other column still answers.
+    from mhw3d_detection_spark.plans import detect_mhw
+
+    times = pd.date_range("2000-01-01", "2003-12-31", freq="D")
+    temp = np.full(len(times), 15.0)
+    for lo, hi in (("2002-06-01", "2002-06-06"), ("2002-06-08", "2002-06-13")):
+        temp[(times >= lo) & (times <= hi)] = 18.0
+    pdf = pd.DataFrame({"cell_id": 0, "time": times.date, "temp": temp})
+    m = detect_mhw(
+        spark.createDataFrame(pdf), baseline=(2000, 2001), pool_mode="grid"
+    )
+    with pytest.raises(
+        Exception,
+        match=r"cell 0, event starting 2002-06-01 has no category: .* is NaN",
+    ):
+        m.collect()
+    got = [r.asDict() for r in m.drop("category").collect()]
+    assert len(got) == 1
+    row = got[0]
+    assert (row["date_start"], row["duration"], row["intensity_max"]) == (
+        dt.date(2002, 6, 1),
+        13,
+        3.0,
+    )
+    assert row["date_peak"] == dt.date(2002, 6, 1)
+    assert (row["duration_extreme"], row["intensity_cumulative"]) == (12, 36.0)
+    assert math.isclose(row["intensity_mean"], 36.0 / 13, rel_tol=1e-12)
+    # onset (3 - (3 + 0) / 2) / 0.5; decline (3 - (3 + 0) / 2) / 12.5
+    assert math.isclose(row["rate_onset"], 3.0, rel_tol=1e-12)
+    assert math.isclose(row["rate_decline"], 0.12, rel_tol=1e-12)

@@ -145,6 +145,25 @@ def test_day_in_two_batches_raises(spark):
         merge_detect_partials(parts).collect()
 
 
+def test_store_without_a_partial_is_refused_at_plan_build(spark):
+    """Every partial column is required: a store that lacks the rate
+    partials fails analysis when the merge is built, naming the
+    column, even though a reader might never select a rate."""
+    from pyspark.errors import AnalysisException
+
+    rows = [
+        (0, DAY0 + dt.timedelta(days=i), 2.0e5 + (15.0 if 5 <= i < 15 else 8.0),
+         2.0e5 + 10.0, 2.0e5 + 12.0)
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(
+        rows, "cell_id int, time date, temp double, seas double, thresh double"
+    )
+    parts = detect_partials(df).drop("first_rs", "last_rs")
+    with pytest.raises(AnalysisException, match="first_rs"):
+        merge_detect_partials(parts)
+
+
 def test_null_seas_first_batch_does_not_null_moments(spark):
     """Regression (ADVICE r5): if the EARLIEST batch has no non-null
     rel_seas for a cell (seas NULL across its slice), the canonical

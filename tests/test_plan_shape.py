@@ -879,6 +879,28 @@ def test_component_metrics_read_off_run_partials(spark, sf_dir):
         assert "BroadcastHashJoin" not in plan, plan
         assert plan.count("Scan parquet") == 1, plan
 
+
+def test_readers_get_no_partial_they_do_not_read(spark, sf_dir):
+    # every metric column is always defined, and column pruning drops
+    # the partials, windows and aggregates a reader does not select
+    from mhw3d_detection_spark.queries.detection import (
+        q_cold_spells,
+        q_event_metrics,
+        q_onset_decline_rates,
+    )
+
+    no_rates_no_bands = ("first_rs", "before_rs", "series_start", "pkc_key", "d_mod")
+    unread = {
+        q_event_metrics: no_rates_no_bands,
+        q_cold_spells: no_rates_no_bands,
+        q_onset_decline_rates: ("pkc_key", "d_mod", "q_rs"),
+    }
+    for q, cols in unread.items():
+        plan = _executed(q(spark, sf_dir))
+        for c in cols:
+            assert c not in plan, (q.__name__, c, plan)
+
+
 def test_minhash_bucket_join_skew_splittable(spark, sf_dir):
     # r14 (VERDICT r13 Next #1): the LSH bucket self-join must stay
     # AQE-skew-splittable — a sort-merge join over EnsureRequirements
